@@ -79,18 +79,20 @@ def read_cdc_state(
 
     The stored table keeps ``op_col``/``seq_col`` bookkeeping so folds stay
     seq-aware across micro-batches (tombstones persist as rows); this
-    reader hides that: resolve the latest committed version when the root
-    is a versioned table (else read the bucketed layout directly), drop
+    reader hides that: read the latest committed version when the root
+    is a manifest table (else read the bucketed layout directly), drop
     tombstone rows, and strip the op / bucket bookkeeping columns. The
     sequence column stays — it is real data (the row's version).
     """
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        BUCKET_COL,
-        resolve_version,
+    from stock_market_data_pipeline_spark.sinks.lake import BUCKET_COL
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        read_manifest,
     )
 
-    path = resolve_version(spark, table_root)
-    df = spark.read.parquet(path if path is not None else table_root)
+    try:
+        df = read_manifest(spark, table_root)
+    except FileNotFoundError:  # no committed manifest: bucketed layout
+        df = spark.read.parquet(table_root)
     live = df.filter(F.col(op_col) != delete_op).drop(op_col)
     if BUCKET_COL in live.columns:
         live = live.drop(BUCKET_COL)

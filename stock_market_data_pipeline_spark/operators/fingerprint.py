@@ -7,10 +7,10 @@ join of both. The anti-entropy pattern (Cassandra repair, DynamoDB global
 tables) compares SUMMARIES first: hash every row, fold row hashes into an
 order-independent per-bucket fingerprint, and only the buckets whose
 fingerprints disagree ever get the expensive row-level treatment (e.g.
-``sinks/lake.py:version_diff`` scoped to those buckets). The summary pass
-is one map-side-combined aggregate per table — each side can even run on a
-different engine, because the row hash is the engine-portable md5 form the
-samplers use.
+``sinks/manifest_lake.py:manifest_version_diff`` scoped to those buckets).
+The summary pass is one map-side-combined aggregate per table — each side
+can even run on a different engine, because the row hash is the
+engine-portable md5 form the samplers use.
 
 Fold choice: SUM of 32-bit row hashes (never XOR — XOR cancels duplicate
 rows pairwise, so two copies differing by a duplicated row would collide).

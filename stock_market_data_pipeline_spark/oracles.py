@@ -3722,8 +3722,8 @@ GROUP BY user_id
 
 # X92 time travel + rollback: both fingerprints are predicted from the v1
 # slice definition (even event_ids) — the Spark side reads them through
-# read_versioned(version=1) after a clobbering v2 publish, and through
-# the latest pointer after rollback_version(1). Any wrong-version resolve
+# read_manifest(version=1) after a clobbering v2 publish, and through
+# the latest pointer after rollback_manifest(1). Any wrong-version resolve
 # shifts counts and hash-sums.
 ORACLES["time_travel_read"] = """
 WITH v1 AS (

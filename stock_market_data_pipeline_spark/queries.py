@@ -1916,18 +1916,18 @@ def q_quantized_topk_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pruned_scan_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manifest file-stats pruning (X100): publish lineitem as a versioned
-    table range-binned on l_orderkey with a per-file min/max manifest,
-    then answer a key-range rollup through the file-skipping reader. The
+    """Manifest file-stats pruning (X100): publish lineitem as a manifest
+    table range-binned on l_orderkey with per-file min/max stats, then
+    answer a key-range rollup through the file-skipping reader. The
     oracle computes the same rollup straight off the raw table — equality
     proves the prune is lossless; the pytest audit proves files were
     actually skipped."""
     import shutil
     import tempfile
 
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        publish_version,
-        read_versioned_pruned,
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        publish_files,
+        read_manifest_pruned,
     )
 
     li = read_table(spark, sf_dir, "lineitem").select(
@@ -1943,8 +1943,8 @@ def q_pruned_scan_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned = li.repartition(8, bin_id)
     root = tempfile.mkdtemp(prefix="smdp_pruned_scan_")
     try:
-        publish_version(spark, binned, root, stats_cols=["l_orderkey"])
-        pruned = read_versioned_pruned(
+        publish_files(spark, binned, root, stats_cols=["l_orderkey"])
+        pruned = read_manifest_pruned(
             spark, root, "l_orderkey", lo=None, hi=cut
         )
         out = pruned.groupBy("l_returnflag").agg(
@@ -2363,7 +2363,9 @@ def q_stream_dim_enrich_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from stock_market_data_pipeline_spark.sinks.lake import publish_version
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        publish_files,
+    )
     from stock_market_data_pipeline_spark.streaming.pipeline import (
         stream_dim_enrich,
     )
@@ -2400,13 +2402,13 @@ def q_stream_dim_enrich_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim_v2 = spark.createDataFrame(
             [(i, "v2") for i in range(20)], "k long, grp string"
         )
-        publish_version(spark, dim_v1, dim_root, keep_versions=3)
+        publish_files(spark, dim_v1, dim_root)
         ev.filter(F.col("event_id") % 3 == 0).coalesce(1).write.mode(
             "append"
         ).parquet(src)
         _stamp_stream_batch(src, 0)
         _run()  # batch 0 enriched with v1
-        publish_version(spark, dim_v2, dim_root, keep_versions=3)
+        publish_files(spark, dim_v2, dim_root)
         for part in (1, 2):
             ev.filter(F.col("event_id") % 3 == part).coalesce(1).write.mode(
                 "append"
@@ -2614,14 +2616,14 @@ def q_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-travel diff (X104): publish two versions of an orders slice
     (drops, inserts, and priority restatements between them), then recover
     the exact changelog — added/removed/changed per key — from the
-    versioned lake alone. The oracle recomputes the diff from the slice
+    manifest table alone. The oracle recomputes the diff from the slice
     definitions; equality proves the lake's diff is lossless."""
     import shutil
     import tempfile
 
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        publish_version,
-        version_diff,
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        manifest_version_diff,
+        publish_files,
     )
 
     orders = read_table(spark, sf_dir, "orders").select(
@@ -2636,9 +2638,9 @@ def q_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = tempfile.mkdtemp(prefix="smdp_version_diff_")
     try:
-        publish_version(spark, v1, root, keep_versions=3)
-        publish_version(spark, v2, root, keep_versions=3)
-        out = version_diff(
+        publish_files(spark, v1, root)
+        publish_files(spark, v2, root)
+        out = manifest_version_diff(
             spark, root, v_old=1, v_new=2, keys=["o_orderkey"]
         )
         return out.localCheckpoint(eager=True)
@@ -3730,27 +3732,29 @@ def q_clustered_scan_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X92 versioned-lake time travel + rollback as a driver row (r13
+    """X92 manifest-table time travel + rollback as a driver row (r13
     verdict item 6 — was tests-only): publish v1 (even event_ids), then
     v2 OVERWRITING with a different slice (multiples of 5); (a) time
-    travel — ``read_versioned(version=1)`` must see v1 exactly although
-    v2 is latest; (b) ``rollback_version(1)`` re-publishes v1's data as
-    v3 (copy-forward; history stays linear) and the LATEST read must
-    flip back. The oracle predicts BOTH fingerprints from the v1 slice
-    definition — a reader resolving the wrong version directory shifts
-    every count and hash-sum. Runtime-asserts the GC window: the
-    rollback publish (keep_versions=2) retires v1's directory, so
-    committed versions afterwards are exactly [2, 3] — readers never see
-    a pointer move backwards, old versions age out by retention."""
+    travel — ``read_manifest(version=1)`` must see v1 exactly although
+    v2 is latest; (b) ``rollback_manifest(1)`` re-publishes v1's file
+    list as v3 (copy-forward; history stays linear) and the LATEST read
+    must flip back. The oracle predicts BOTH fingerprints from the v1
+    slice definition — a reader resolving the wrong version shifts
+    every count and hash-sum. Runtime-asserts the GC window: a
+    ``vacuum_manifest(keep_versions=2)`` after the rollback retires v1's
+    manifest, so committed versions afterwards are exactly [2, 3] —
+    readers never see a pointer move backwards, old versions age out by
+    retention, and v1's files survive because v3 references them."""
     import shutil
     import tempfile
 
     from stock_market_data_pipeline_spark.operators.sampling import sample_hash32
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        committed_versions,
-        publish_version,
-        read_versioned,
-        rollback_version,
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        describe_manifest,
+        publish_files,
+        read_manifest,
+        rollback_manifest,
+        vacuum_manifest,
     )
 
     ev = read_table(spark, sf_dir, "events").select(
@@ -3771,28 +3775,21 @@ def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.lit(kind).alias("kind"), "*")
 
     try:
-        publish_version(
-            spark, ev.filter(F.col("event_id") % 2 == 0), root,
-            keep_versions=4,
-        )
-        publish_version(
-            spark, ev.filter(F.col("event_id") % 5 == 0), root,
-            keep_versions=4,
-        )
-        # materialize BEFORE the rollback publish GCs v1's directory —
-        # read_versioned is lazy; collecting after the GC would read a
-        # deleted path
+        publish_files(spark, ev.filter(F.col("event_id") % 2 == 0), root)
+        publish_files(spark, ev.filter(F.col("event_id") % 5 == 0), root)
         tt = fingerprint(
-            read_versioned(spark, root, version=1), "time_travel"
+            read_manifest(spark, root, version=1), "time_travel"
         ).localCheckpoint(eager=True)
-        rollback_version(spark, root, 1)
-        if committed_versions(spark, root) != [2, 3]:
+        rollback_manifest(spark, root, 1)
+        vacuum_manifest(spark, root, keep_versions=2, grace_seconds=0)
+        committed = describe_manifest(spark, root)["committed_versions"]
+        if committed != [2, 3]:
             raise AssertionError(
-                "rollback must append a new version and retire only "
-                f"beyond the GC window; got {committed_versions(spark, root)}"
+                "rollback must append a new version and vacuum retire "
+                f"only beyond the GC window; got {committed}"
             )
         rb = fingerprint(
-            read_versioned(spark, root), "post_rollback"
+            read_manifest(spark, root), "post_rollback"
         ).localCheckpoint(eager=True)
         return tt.unionByName(rb)
     finally:

@@ -225,10 +225,10 @@ _COMMIT_LOCK = NoOpCommitLock()
 
 def set_commit_lock(lock) -> object:
     """Install the commit-lock adapter every ``write_text_exclusive``
-    commit point routes through (version markers in ``publish_version``,
-    manifest JSON + marker in ``manifest_lake._commit``). Returns the
-    previous lock so callers/tests can restore it. POSIX/HDFS keep the
-    default :class:`NoOpCommitLock`; an S3A deployment installs a
+    commit point routes through (manifest JSON + marker in
+    ``manifest_lake._commit``). Returns the previous lock so
+    callers/tests can restore it. POSIX/HDFS keep the default
+    :class:`NoOpCommitLock`; an S3A deployment installs a
     :class:`LeaseCommitLock`-shaped adapter backed by its lock service."""
     global _COMMIT_LOCK
     prev = _COMMIT_LOCK
@@ -330,8 +330,8 @@ class _HadoopFS:
         # Only for REGULAR FILES, via link+unlink — os.rename silently
         # REPLACES a dst created between a lexists check and the rename,
         # where Hadoop rename returns False and callers raise (r19
-        # advice: the versioned-lake swap paths rely on that failure as
-        # a race guard). hard-link creation is atomically no-replace, so
+        # advice: the directory-swap paths rely on that failure as a
+        # race guard). hard-link creation is atomically no-replace, so
         # a racing dst loses the window entirely; directories and
         # anything unusual keep the JVM call and its exact semantics.
         import os as _os
@@ -582,8 +582,8 @@ def merge_upsert(
     s3a://, or abfs:// paths. The rename swap is atomic on HDFS/POSIX but
     copy+delete on object stores — at scale on S3-like storage prefer
     :func:`merge_upsert_bucketed` (publish rides Spark's committer) or
-    :func:`merge_upsert_versioned` (marker-file commit, no rename at all,
-    no missing-directory instant).
+    ``manifest_lake.merge_upsert_manifest`` (marker-file commit, no rename
+    at all, no missing-directory instant).
     """
     fs = _HadoopFS(spark, path)
     exists = fs.is_dir(path) and any(
@@ -816,8 +816,8 @@ def compact_small_files(
     In-place compaction inherently has the two-rename swap window (readers
     can observe a missing directory for an instant; a crash between the
     renames needs the documented manual recovery). Tables that can adopt
-    the versioned layout should use :func:`compact_versioned`, which has
-    neither problem.
+    the manifest format should use ``manifest_lake.compact_manifest``,
+    which has neither problem.
     """
     import math
 
@@ -869,202 +869,6 @@ def compact_small_files(
     }
 
 
-_COMMIT_SUFFIX = "._COMMITTED"
-_STATS_SUFFIX = "._STATS"
-
-
-def _version_name(n: int) -> str:
-    return f"v{n:08d}"
-
-
-def _list_versions(fs: _HadoopFS, root: str) -> tuple[list[int], list[int]]:
-    """(committed, all-known) version numbers under a versioned table root."""
-    if not fs.is_dir(root):
-        return [], []
-    names = fs.child_names(root)
-    committed, known = [], []
-    for n in names:
-        if n.startswith("v") and n[1:].isdigit():
-            known.append(int(n[1:]))
-        elif n.endswith(_COMMIT_SUFFIX):
-            stem = n[: -len(_COMMIT_SUFFIX)]
-            if stem.startswith("v") and stem[1:].isdigit():
-                committed.append(int(stem[1:]))
-    # A marker without its data dir means someone deleted data out-of-band;
-    # never resolve to it.
-    live = sorted(set(committed) & set(known))
-    return live, sorted(set(known) | set(committed))
-
-
-def resolve_version(
-    spark: SparkSession, root: str, version: int | None = None
-) -> str | None:
-    """Path of a COMMITTED version of a versioned table, or None.
-
-    ``version=None`` resolves the newest committed version; an explicit
-    number time-travels to that version (it must still be inside the GC
-    retention window — ``KeyError`` names the available versions if not).
-    Readers call this (or :func:`read_versioned`) instead of hard-coding a
-    data path; an in-flight or crashed publish is invisible because its
-    version has no commit marker yet.
-    """
-    fs = _HadoopFS(spark, root)
-    committed, _ = _list_versions(fs, root)
-    if not committed:
-        return None
-    if version is None:
-        n = committed[-1]
-    elif version in committed:
-        n = version
-    else:
-        raise KeyError(
-            f"version {version} not committed under {root}; "
-            f"available: {committed}"
-        )
-    return f"{root.rstrip('/')}/{_version_name(n)}"
-
-
-def read_versioned(
-    spark: SparkSession,
-    root: str,
-    fmt: str = "parquet",
-    version: int | None = None,
-) -> DataFrame:
-    """Read a versioned table — the latest committed version, or an
-    explicit ``version`` for time travel (within the retention window)."""
-    v = resolve_version(spark, root, version=version)
-    if v is None:
-        raise FileNotFoundError(f"no committed version under {root}")
-    return spark.read.format(fmt).load(v)
-
-
-def committed_versions(spark: SparkSession, root: str) -> list[int]:
-    """Version numbers currently readable (newest last) — what time travel
-    and rollback can reach; bounded by ``keep_versions`` at publish time."""
-    fs = _HadoopFS(spark, root)
-    committed, _ = _list_versions(fs, root)
-    return committed
-
-
-def rollback_version(
-    spark: SparkSession, root: str, version: int, fmt: str = "parquet"
-) -> str:
-    """Roll the table back by RE-PUBLISHING an old version's data as the
-    next version (copy-forward, exactly how Delta/Iceberg restore works):
-    history stays linear and append-only, the bad version remains
-    inspectable until GC, and concurrent readers never see a pointer move
-    backwards — they just observe another commit. ``fmt`` must match the
-    format the table was published with.
-    """
-    src = resolve_version(spark, root, version=version)
-    if src is None:
-        raise FileNotFoundError(
-            f"no committed version under {root}; nothing to roll back to"
-        )
-    df = spark.read.format(fmt).load(src)
-    return publish_version(spark, df, root, fmt=fmt)
-
-
-def publish_version(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    fmt: str = "parquet",
-    keep_versions: int = 2,
-    repartition: int | None = None,
-    stats_cols: list[str] | None = None,
-) -> str:
-    """Publish ``df`` as the next version of a manifest-committed table.
-
-    The commit protocol that removes :func:`merge_upsert` /
-    :func:`compact_small_files`'s rename window entirely:
-
-    1. write the full dataset into a fresh ``vNNNNNNNN`` directory (never
-       touched by readers — it has no commit marker);
-    2. create the marker file ``vNNNNNNNN._COMMITTED`` — the single atomic
-       commit point (a file either exists or it doesn't; no rename, no
-       delete, no instant where the table resolves to nothing);
-    3. garbage-collect: committed versions older than ``keep_versions`` and
-       any UNCOMMITTED dirs older than the new version (crashed publishes —
-       recovery is automatic, no operator action).
-
-    A crash anywhere before (2) leaves the previous version live and a
-    harmless orphan dir the next publish GCs. A crash after (2) means the
-    new version IS live. Readers (:func:`resolve_version`) therefore always
-    see exactly one complete version. Works identically on object stores:
-    nothing here renames — only writes and deletes of distinct names.
-
-    Single-writer, like every sink in this module; concurrent writers need
-    a table format with a transactional log (Delta/Iceberg), whose
-    version-pointer design this mirrors in miniature.
-    """
-    fs = _HadoopFS(spark, root)
-    committed, known = _list_versions(fs, root)
-    nxt = (known[-1] + 1) if known else 1
-    vname = _version_name(nxt)
-    vpath = f"{root.rstrip('/')}/{vname}"
-    out = df.repartition(repartition) if repartition else df
-    out.write.mode("overwrite").format(fmt).save(vpath)
-    if stats_cols:
-        _write_file_stats(spark, fs, vpath, fmt, stats_cols)
-    fs.write_text(f"{vpath}{_COMMIT_SUFFIX}", vname)
-    # GC: old committed versions beyond the retention window, and every
-    # uncommitted orphan older than the version just published.
-    for old_v in committed[: max(0, len(committed) - (keep_versions - 1))]:
-        base = f"{root.rstrip('/')}/{_version_name(old_v)}"
-        fs.delete(f"{base}{_COMMIT_SUFFIX}")
-        fs.delete(f"{base}{_STATS_SUFFIX}")
-        fs.delete(base)
-    for orphan in set(known) - set(committed):
-        if orphan < nxt:
-            base = f"{root.rstrip('/')}/{_version_name(orphan)}"
-            fs.delete(base)
-            # A marker whose data dir vanished out-of-band is also an
-            # orphan (never resolvable — _list_versions requires both);
-            # delete the marker too or it survives every publish forever.
-            fs.delete(f"{base}{_COMMIT_SUFFIX}")
-            fs.delete(f"{base}{_STATS_SUFFIX}")
-    return vpath
-
-
-def _write_file_stats(
-    spark: SparkSession,
-    fs: _HadoopFS,
-    vpath: str,
-    fmt: str,
-    stats_cols: list[str],
-) -> None:
-    """Per-file min/max manifest for a freshly written version directory —
-    the miniature of Iceberg's manifest file stats. Computed as ONE
-    distributed aggregate grouped by input_file_name() (never a driver-side
-    footer walk, so it works on object stores and any fmt), collected
-    bounded by the file count, and written as a sidecar BEFORE the commit
-    marker — stats are part of the version payload, never half-published.
-    """
-    import json as _json
-
-    aggs = []
-    for c in stats_cols:
-        aggs.append(F.min(c).alias(f"__min_{c}"))
-        aggs.append(F.max(c).alias(f"__max_{c}"))
-    rows = (
-        spark.read.format(fmt).load(vpath)
-        .groupBy(F.input_file_name().alias("__f"))
-        .agg(*aggs)
-        .collect()
-    )
-    files = {}
-    for r in rows:
-        fname = r["__f"].rsplit("/", 1)[-1]
-        files[fname] = {
-            c: [r[f"__min_{c}"], r[f"__max_{c}"]] for c in stats_cols
-        }
-    fs.write_text(
-        f"{vpath}{_STATS_SUFFIX}",
-        _json.dumps({"cols": stats_cols, "files": files}, default=str),
-    )
-
-
 _ISO_DATE_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
 _ISO_TS_RE = re.compile(r"^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}:\d{2}(\.\d+)?$")
 
@@ -1097,144 +901,6 @@ def _stat_key(v) -> tuple[str, object] | None:
             base, _, frac = v.replace("T", " ").partition(".")
             return ("ts", f"{base}.{frac.ljust(6, '0')}")
     return None
-
-
-def read_versioned_pruned(
-    spark: SparkSession,
-    root: str,
-    col: str,
-    lo=None,
-    hi=None,
-    fmt: str = "parquet",
-    version: int | None = None,
-) -> DataFrame:
-    """File-skipping versioned read: consult the version's per-file min/max
-    manifest (``publish_version(stats_cols=...)``) and read ONLY the files
-    whose ``col`` range overlaps [lo, hi] — Spark never even opens the
-    skipped files, which on a 100 TB table is the difference between a
-    manifest lookup and a full listing+footer pass. The exact predicate is
-    re-applied after the file prune, so the result is identical to
-    ``read_versioned().filter(...)`` by construction (the oracle-gated
-    registry query pins this).
-
-    Stats prune on numeric columns AND on dates/timestamps: the manifest
-    serializes those via ``str()`` (ISO ``YYYY-MM-DD[ HH:MM:SS[.ffffff]]``),
-    which compares lexicographically in range order, so date-partitioned
-    time travel skips files too (round-7 ADVICE — previously only numerics
-    engaged and the full scan was paid silently). Files with NULL,
-    non-orderable (plain string / Decimal), or shape-mismatched stats
-    (date stat vs timestamp bound) are conservatively read. No manifest
-    (or an unindexed column) falls back to the full filtered read. Compose
-    with a range-clustered or z-ordered publish so file ranges are
-    actually tight.
-    """
-    import json as _json
-
-    vdir = resolve_version(spark, root, version=version)
-    if vdir is None:
-        raise FileNotFoundError(f"no committed version under {root}")
-    c = F.col(col)
-    cond = F.lit(True)
-    if lo is not None:
-        cond = cond & (c >= F.lit(lo))
-    if hi is not None:
-        cond = cond & (c <= F.lit(hi))
-    full = spark.read.format(fmt).load(vdir)
-    fs = _HadoopFS(spark, root)
-    stats_path = f"{vdir}{_STATS_SUFFIX}"
-    if not fs.is_file(stats_path):
-        return full.filter(cond)
-    meta = _json.loads(fs.read_text(stats_path))
-    if col not in meta.get("cols", []):
-        return full.filter(cond)
-    klo = _stat_key(lo) if lo is not None else None
-    khi = _stat_key(hi) if hi is not None else None
-    keep = []
-    for fname, st in meta["files"].items():
-        kmn, kmx = _stat_key(st[col][0]), _stat_key(st[col][1])
-        if kmn is None or kmx is None:
-            keep.append(fname)  # unknown/non-orderable stats -> must read
-            continue
-        if klo is not None and kmx[0] == klo[0] and kmx[1] < klo[1]:
-            continue
-        if khi is not None and kmn[0] == khi[0] and kmn[1] > khi[1]:
-            continue
-        keep.append(fname)
-    if not keep:
-        return full.filter(F.lit(False))
-    pruned = (
-        spark.read.format(fmt)
-        .schema(full.schema)
-        .load([f"{vdir}/{f}" for f in keep])
-    )
-    return pruned.filter(cond)
-
-
-def merge_upsert_versioned(
-    spark: SparkSession,
-    incoming: DataFrame,
-    root: str,
-    keys: list[str],
-    order_col: str,
-    keep_versions: int = 2,
-) -> str:
-    """:func:`merge_upsert` semantics (last-writer-wins per key) on a
-    manifest-committed table: read the current committed version, merge,
-    publish the result as the next version. No rename window — a reader
-    racing the merge sees either the old or the new version, both complete;
-    a crashed merge is invisible and self-heals on the next run.
-    """
-    current_path = resolve_version(spark, root)
-    if current_path is not None:
-        current = spark.read.parquet(current_path)
-        merged = current.unionByName(incoming, allowMissingColumns=True)
-    else:
-        merged = incoming
-    deduped = dedup_keep_last(merged, keys=keys, order=[order_col])
-    return publish_version(spark, deduped, root, keep_versions=keep_versions)
-
-
-def compact_versioned(
-    spark: SparkSession,
-    root: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    fmt: str = "parquet",
-    keep_versions: int = 2,
-) -> dict:
-    """:func:`compact_small_files` for a manifest-committed table: rewrite
-    the current version into ceil(bytes/target) files as the NEXT version.
-    Readers never lose the table for even an instant (the old version stays
-    committed until the new marker lands), and a crash mid-compaction needs
-    no manual recovery — the half-written version has no marker and the
-    next publish deletes it.
-    """
-    import math
-
-    fs = _HadoopFS(spark, root)
-    current_path = resolve_version(spark, root)
-    if current_path is None:
-        raise FileNotFoundError(f"no committed version under {root}")
-    statuses = fs.fs.listStatus(fs.path(current_path))
-    data_files = [
-        s
-        for s in statuses
-        if s.isFile() and not s.getPath().getName().startswith(("_", "."))
-    ]
-    total = sum(s.getLen() for s in data_files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.format(fmt).load(current_path)
-    publish_version(
-        spark, df, root, fmt=fmt, keep_versions=keep_versions, repartition=n_out
-    )
-    new_path = resolve_version(spark, root)
-    after = [
-        n for n in fs.child_names(new_path) if not n.startswith(("_", "."))
-    ]
-    return {
-        "files_before": len(data_files),
-        "files_after": len(after),
-        "bytes": total,
-    }
 
 
 def write_clustered(
@@ -1271,66 +937,3 @@ def write_clustered(
     if fmt == "csv":
         writer = writer.option("header", "true")
     writer.format(fmt).save(path)
-
-
-def version_diff(
-    spark: SparkSession,
-    root: str,
-    v_old: int,
-    v_new: int,
-    keys: list[str],
-    compare_cols: list[str] | None = None,
-    include_unchanged: bool = False,
-    fmt: str = "parquet",
-) -> DataFrame:
-    """Key-level diff between two committed versions of a versioned table:
-    one row per key that was ``added``, ``removed``, or ``changed`` between
-    ``v_old`` and ``v_new`` (plus ``unchanged`` rows when asked). The
-    time-travel analogue of CDC — when no changelog was captured, the diff
-    IS the changelog, and it's how a downstream incremental consumer
-    catches up after missing intermediate versions.
-
-    ``compare_cols`` limits change detection to those columns (default:
-    every non-key column present on BOTH sides). Comparison is null-safe —
-    NULL == NULL is unchanged, NULL vs value is changed.
-
-    Plan: one full outer join keyed on ``keys`` — a single co-partitioned
-    shuffle of the two versions' key+compared columns (prune the rest at
-    scan). For bucket-level pre-narrowing before paying this join on a
-    100 TB table, see ``operators/fingerprint.py:fingerprint_diff``.
-    """
-    old = read_versioned(spark, root, fmt=fmt, version=v_old)
-    new = read_versioned(spark, root, fmt=fmt, version=v_new)
-    return _key_diff(old, new, keys, compare_cols, include_unchanged)
-
-
-def _key_diff(
-    old: DataFrame,
-    new: DataFrame,
-    keys: list[str],
-    compare_cols: list[str] | None,
-    include_unchanged: bool,
-) -> DataFrame:
-    """The join core of :func:`version_diff`, shared with the manifest
-    format's ``manifest_version_diff`` — same contract either way."""
-    if compare_cols is None:
-        compare_cols = [
-            c for c in old.columns if c in set(new.columns) and c not in keys
-        ]
-    o = old.select(
-        *keys, F.struct(*compare_cols).alias("_vo"), F.lit(1).alias("_po")
-    )
-    n = new.select(
-        *keys, F.struct(*compare_cols).alias("_vn"), F.lit(1).alias("_pn")
-    )
-    j = o.join(n, keys, "full_outer")
-    change = (
-        F.when(F.col("_po").isNull(), F.lit("added"))
-        .when(F.col("_pn").isNull(), F.lit("removed"))
-        .when(~F.col("_vo").eqNullSafe(F.col("_vn")), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    out = j.select(*keys, change.alias("change_type"))
-    if not include_unchanged:
-        out = out.filter(F.col("change_type") != "unchanged")
-    return out

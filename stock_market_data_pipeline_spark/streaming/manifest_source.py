@@ -60,11 +60,13 @@ Contract mirrors Delta's streaming source:
   ``read_manifest_table_changes`` per-commit walk, X155), which
   key-join such commits exactly.
 
-Scale posture: offset resolution is one metadata listing; planning is a
-file-set difference (O(changed files)); each planned file becomes one
-``InputPartition`` read executor-side by pyarrow in Arrow batches — no
-row-at-a-time Python in the data path. This reader resolves paths with
-``os`` (``file:`` scheme); an object-store deployment swaps the four
+Scale posture: offset resolution is the sink's own latest-version walk
+(advisory pointer plus forward probe, ``manifest_lake._latest_committed``)
+run over ``os`` calls; planning is a file-set difference (O(changed
+files)); each planned file becomes one ``InputPartition`` read
+executor-side by pyarrow in Arrow batches — no row-at-a-time Python in
+the data path. This reader resolves paths with ``os`` (``file:``
+scheme); an object-store deployment swaps ``_OsFS`` and the
 ``_local``-based helpers for fsspec equivalents — the offset/planning
 logic is scheme-agnostic.
 """
@@ -82,9 +84,6 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_MF_RE = re.compile(r"^v(\d{8})\.json$")
-_COMMIT_SUFFIX = "._COMMITTED"
-
 
 def _local(path: str) -> str:
     """Strip a ``file:`` scheme; refuse remote schemes (this reader's FS
@@ -101,81 +100,62 @@ def _local(path: str) -> str:
     return path
 
 
-def _committed_versions(root: str) -> list[int]:
-    mdir = f"{root.rstrip('/')}/mf"
-    if not os.path.isdir(mdir):
-        return []
-    names = set(os.listdir(mdir))
-    return sorted(
-        int(m.group(1))
-        for n in names
-        if (m := _MF_RE.match(n)) and f"{n}{_COMMIT_SUFFIX}" in names
-    )
+class _OsFS:
+    """The calls the sink's latest-version walk
+    (``manifest_lake._latest_committed``) makes on its filesystem
+    handle, answered with ``os`` on local paths: a trigger poll costs a
+    few stat calls and no py4j round-trip."""
 
+    @staticmethod
+    def read_text(p: str) -> str:
+        with open(p) as fh:  # FileNotFoundError when absent
+            return fh.read()
 
-def _mf_paths(root: str, v: int) -> tuple[str, str]:
-    mp = f"{root.rstrip('/')}/mf/v{v:08d}.json"
-    return mp, f"{mp}{_COMMIT_SUFFIX}"
+    exists = staticmethod(os.path.exists)
+    is_dir = staticmethod(os.path.isdir)
+    child_names = staticmethod(os.listdir)
 
 
 def _latest_committed_version(root: str) -> int | None:
-    """Latest committed version via the r20 advisory pointer — the
-    os-level mirror of the sink module's ``_latest_committed``, paying
-    O(1) stat/read calls instead of an O(history) directory listing on
-    EVERY ``latestOffset`` trigger poll. Same recovery contract: a
-    stale pointer is healed by forward existence probes (allocation is
-    contiguous) plus a marker re-scan over (committed, known]; any
-    anomaly falls back to the full listing."""
-    try:
-        with open(f"{root.rstrip('/')}/mf/_latest") as fh:
-            d = json.load(fh)
-        c = d["committed"]
-        c = int(c) if c is not None else None
-        k = int(d["known"])
-    except (OSError, ValueError, KeyError, TypeError):
-        vs = _committed_versions(root)
-        return vs[-1] if vs else None
-    if k < 1 or (c is not None and c > k) or k - (c or 0) > 64:
-        vs = _committed_versions(root)
-        return vs[-1] if vs else None
-    if c is not None and not os.path.exists(_mf_paths(root, c)[1]):
-        vs = _committed_versions(root)
-        return vs[-1] if vs else None
-    for w in range((c or 0) + 1, k + 1):
-        if os.path.exists(_mf_paths(root, w)[1]):
-            c = w
-    v = k
-    while os.path.exists(_mf_paths(root, v + 1)[0]):
-        v += 1
-        if v - k > 64:
-            vs = _committed_versions(root)
-            return vs[-1] if vs else None
-        if os.path.exists(_mf_paths(root, v)[1]):
-            c = v
-    return c
+    """Latest committed version: the sink's advisory-pointer walk with
+    its forward probe and listing fallback, over ``_OsFS``."""
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        _latest_committed,
+    )
+
+    return _latest_committed(_OsFS(), root)[0]
 
 
 def _committed_in_range(root: str, v0: int, v1: int) -> list[int]:
     """Committed versions in (v0, v1], by direct existence probes —
     O(range) stats instead of an O(history) listing (the CDF walk plans
     one micro-batch's version span, which is small by construction)."""
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        _COMMIT_SUFFIX,
+        _mf_dir,
+        _mf_name,
+    )
+
+    mdir = _mf_dir(root)
     return [
         v
         for v in range(v0 + 1, v1 + 1)
-        if os.path.exists(_mf_paths(root, v)[1])
-        and os.path.exists(_mf_paths(root, v)[0])
+        if os.path.exists(f"{mdir}/{_mf_name(v)}{_COMMIT_SUFFIX}")
+        and os.path.exists(f"{mdir}/{_mf_name(v)}")
     ]
 
 
 def _load_meta(root: str, version: int) -> dict:
-    with open(f"{root.rstrip('/')}/mf/v{version:08d}.json") as fh:
-        meta = json.load(fh)
-    # protocol gate (X157) — pure-read path, reader features only;
     # lazily imported like _row_preserving (one classification source)
     from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        _mf_dir,
+        _mf_name,
         _require_features,
     )
 
+    with open(f"{_mf_dir(root)}/{_mf_name(version)}") as fh:
+        meta = json.load(fh)
+    # protocol gate (X157) — pure-read path, reader features only
     _require_features(meta, root)
     return meta
 

@@ -375,11 +375,13 @@ def stream_apply_changelog(
 
     ``mode`` picks the persistence layout:
 
-    * ``"versioned"`` — manifest-committed versioned table
-      (:func:`..sinks.lake.publish_version`): readers only ever resolve
-      complete versions; time travel works. Per-batch cost is
+    * ``"versioned"`` — a manifest table
+      (:func:`..sinks.manifest_lake.publish_files`): readers only ever
+      resolve complete versions; time travel works. Per-batch cost is
       O(batch ∪ current) — the whole table republishes — so this is the
-      small-table / demo form.
+      small-table / demo form. Superseded versions (and their files) are
+      kept until :func:`..sinks.manifest_lake.vacuum_manifest` runs, as
+      with every other manifest writer.
     * ``"bucketed"`` — the 100 TB form: winners fold through
       :func:`..sinks.lake.merge_upsert_bucketed` with ``changelog_winners``
       as the reducer, so a micro-batch rewrites ONLY the key buckets it
@@ -394,8 +396,10 @@ def stream_apply_changelog(
     from stock_market_data_pipeline_spark.operators.cdc import changelog_winners
     from stock_market_data_pipeline_spark.sinks.lake import (
         merge_upsert_bucketed,
-        publish_version,
-        resolve_version,
+    )
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        publish_files,
+        read_manifest,
     )
 
     if mode not in ("versioned", "bucketed"):
@@ -420,13 +424,13 @@ def stream_apply_changelog(
                 reducer=_winners,
             )
             return
-        current_path = resolve_version(spark, table_root)
-        if current_path is not None:
-            current = spark.read.parquet(current_path)
-            new_state = _winners(current.unionByName(winners))
-        else:
+        try:
+            current = read_manifest(spark, table_root)
+        except FileNotFoundError:  # first batch: no committed version
             new_state = winners
-        publish_version(spark, new_state, table_root)
+        else:
+            new_state = _winners(current.unionByName(winners))
+        publish_files(spark, new_state, table_root)
 
     writer = (
         changes.writeStream.foreachBatch(_fold)
@@ -496,8 +500,8 @@ def stream_dim_enrich(
 ):
     """Stream-static enrichment against a VERSIONED dimension: every
     micro-batch re-resolves the currently-committed version of the
-    dimension table (``sinks/lake.py:publish_version`` manifest) and
-    broadcast-joins it onto the batch — the slowly-changing-dimension
+    dimension, a manifest table (``sinks/manifest_lake.py:publish_files``),
+    and broadcast-joins it onto the batch — the slowly-changing-dimension
     pattern for streams. A plain static DataFrame in a stream-static join
     pins the file listing at query start, so dimension updates published
     mid-stream are invisible; resolving INSIDE ``foreachBatch`` picks up
@@ -514,11 +518,13 @@ def stream_dim_enrich(
     join instead. Output is exactly-once by the same idempotent
     dynamic-overwrite contract as ``stream_windowed_analytics``.
     """
-    from stock_market_data_pipeline_spark.sinks.lake import read_versioned
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        read_manifest,
+    )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        dim = read_versioned(spark, dim_root)
+        dim = read_manifest(spark, dim_root)
         out = batch_df.join(F.broadcast(dim), keys, "left").withColumn(
             "batch_id", F.lit(batch_id)
         )

@@ -162,4 +162,6 @@ def test_phantom_prior_entry_cannot_mask_a_mover(
     artifact = json.loads((tmp_path / "BENCH_FULL_r99.json").read_text())
     assert set(artifact["queries_rerun"]) == {"slowish"}
     rr = artifact["queries_rerun"]["slowish"]
-    assert artifact["queries"]["slowish"] == min(rr["sweep"], rr["rerun"])
+    assert artifact["queries"]["slowish"] == sorted(
+        [rr["sweep"], rr["rerun"], rr["rerun2"]]
+    )[1]

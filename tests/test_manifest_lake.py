@@ -3205,3 +3205,62 @@ def test_latest_pointer_vacuum_and_slot_reuse(spark, tmp_path):
     ML.append_files(spark, df, root)                        # v4 (reused)
     fs.write_text(ptr, _j.dumps({"committed": 3, "known": 4}))
     assert ML._latest_committed(fs, root) == (4, 4)
+
+
+def test_vacuum_with_unwritable_pointer_keeps_commits_visible(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """With `_latest` unwritable, a vacuum that deleted an uncommitted
+    slot under the stale pointer would hide every later commit from the
+    forward probe, and the next commit would be numbered BELOW the true
+    latest. A vacuum that cannot confirm its pointer refresh deletes no
+    manifest, keeps the files of every committed version, and still
+    collects unreferenced data files."""
+    import json as _j
+
+    from pyspark.sql import functions as F
+
+    from stock_market_data_pipeline_spark.sinks import manifest_lake as ML
+    from stock_market_data_pipeline_spark.sinks.lake import _HadoopFS
+
+    root = str(tmp_path / "t")
+    df = spark.range(5).withColumn("v", F.col("id"))
+    ML.publish_files(spark, df, root)                       # v1
+    fs = _HadoopFS(spark, root)
+    ptr = f"{ML._mf_dir(root)}/{ML._LATEST_PTR}"
+    assert _j.loads(fs.read_text(ptr)) == {"committed": 1, "known": 1}
+
+    orig = _HadoopFS.write_text
+
+    def failing(self, p, content):
+        if p.endswith(f"/mf/{ML._LATEST_PTR}"):
+            raise IOError("injected: pointer unwritable")
+        return orig(self, p, content)
+
+    monkeypatch.setattr(_HadoopFS, "write_text", failing)
+    # a crashed commit leaves v2 uncommitted; the next commit lands at v3
+    fs.write_text(f"{ML._mf_dir(root)}/{ML._mf_name(2)}", "{}")
+    fs.write_text(f"{ML._data_dir(root)}/orphan.parquet", "junk")
+    assert ML.append_files(spark, df, root) == 3
+    assert _j.loads(fs.read_text(ptr)) == {"committed": 1, "known": 1}
+
+    # v1 stays retained, so the stale pointer's committed mark stays
+    # valid and only the uncommitted v2 is up for deletion
+    res = ML.vacuum_manifest(spark, root, keep_versions=2, grace_seconds=0)
+    assert "not confirmed" in caplog.text
+    assert ML._latest_committed(fs, root) == (3, 3)
+    assert ML.read_manifest(spark, root).count() == 10
+    # the next commit is numbered above the true latest
+    assert ML.append_files(spark, df, root) == 4
+    assert ML.read_manifest(spark, root).count() == 15
+    assert res["manifests_deleted"] == 0
+    assert res["files_deleted"] == 1                        # the orphan
+    assert ML.describe_manifest(spark, root)["committed_versions"] == [1, 3, 4]
+    assert ML.read_manifest(spark, root, version=1).count() == 5
+
+    # once the pointer is writable again, vacuum retires old manifests
+    monkeypatch.setattr(_HadoopFS, "write_text", orig)
+    res = ML.vacuum_manifest(spark, root, keep_versions=1, grace_seconds=0)
+    assert res["manifests_deleted"] == 3
+    assert ML.describe_manifest(spark, root)["committed_versions"] == [4]
+    assert ML.read_manifest(spark, root).count() == 15

@@ -472,10 +472,10 @@ def test_versioned_stats_pruning_skips_files(spark, sf_dir, tmp_path):
     """The manifest prune must (a) actually skip files — audited via
     inputFiles() — and (b) return exactly the full-read-plus-filter rows;
     a version published WITHOUT stats falls back to the full read."""
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        publish_version,
-        read_versioned_pruned,
-        read_versioned,
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        publish_files,
+        read_manifest,
+        read_manifest_pruned,
     )
     from stock_market_data_pipeline_spark.sources.batch import read_table
 
@@ -485,13 +485,13 @@ def test_versioned_stats_pruning_skips_files(spark, sf_dir, tmp_path):
     hi = li.agg(F.max("l_orderkey")).first()[0]
     bin_id = F.least((F.col("l_orderkey") * 8 / (hi + 1)).cast("int"), F.lit(7))
     root = str(tmp_path / "vt")
-    publish_version(
+    publish_files(
         spark, li.repartition(8, bin_id), root, stats_cols=["l_orderkey"]
     )
 
     cut = hi // 5
-    pruned = read_versioned_pruned(spark, root, "l_orderkey", hi=cut)
-    full = read_versioned(spark, root)
+    pruned = read_manifest_pruned(spark, root, "l_orderkey", hi=cut)
+    full = read_manifest(spark, root)
     n_total = len(full.inputFiles())
     n_read = len(pruned.inputFiles())
     assert n_read < n_total, (n_read, n_total)  # files actually skipped
@@ -500,18 +500,20 @@ def test_versioned_stats_pruning_skips_files(spark, sf_dir, tmp_path):
     assert want.exceptAll(pruned).count() == 0
 
     # two-sided range + empty range
-    mid = read_versioned_pruned(spark, root, "l_orderkey", lo=cut, hi=cut * 2)
+    mid = read_manifest_pruned(spark, root, "l_orderkey", lo=cut, hi=cut * 2)
     wmid = full.filter((F.col("l_orderkey") >= cut) & (F.col("l_orderkey") <= cut * 2))
     assert mid.count() == wmid.count()
-    assert read_versioned_pruned(spark, root, "l_orderkey", lo=hi + 10).count() == 0
+    assert read_manifest_pruned(spark, root, "l_orderkey", lo=hi + 10).count() == 0
 
     # no stats -> full read fallback, same rows
     root2 = str(tmp_path / "vt2")
-    publish_version(spark, li, root2)
-    fb = read_versioned_pruned(spark, root2, "l_orderkey", hi=cut)
+    publish_files(spark, li, root2)
+    fb = read_manifest_pruned(spark, root2, "l_orderkey", hi=cut)
+    assert len(fb.inputFiles()) == len(read_manifest(spark, root2).inputFiles())
     assert fb.count() == want.count()
     # unindexed column -> fallback too
-    fb2 = read_versioned_pruned(spark, root, "l_quantity", hi=10)
+    fb2 = read_manifest_pruned(spark, root, "l_quantity", hi=10)
+    assert len(fb2.inputFiles()) == n_total
     assert fb2.count() == full.filter(F.col("l_quantity") <= 10).count()
 
 

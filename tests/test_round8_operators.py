@@ -155,10 +155,10 @@ def test_pruned_read_engages_on_date_stats(spark, sf_dir, tmp_path):
     result still equals the full filtered read."""
     import datetime as dt
 
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        publish_version,
-        read_versioned,
-        read_versioned_pruned,
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        publish_files,
+        read_manifest,
+        read_manifest_pruned,
     )
     from stock_market_data_pipeline_spark.sources.batch import read_table
 
@@ -167,7 +167,7 @@ def test_pruned_read_engages_on_date_stats(spark, sf_dir, tmp_path):
     )
     # range-cluster into 8 files by ship-date so per-file ranges are tight
     root = str(tmp_path / "vt_date")
-    publish_version(
+    publish_files(
         spark,
         li.repartitionByRange(8, "l_shipdate"),
         root,
@@ -177,8 +177,8 @@ def test_pruned_read_engages_on_date_stats(spark, sf_dir, tmp_path):
     # must be datetimes (a date bound deliberately does NOT cross-compare)
     lo = dt.datetime(1994, 1, 1)
     hi = dt.datetime(1994, 6, 30, 23, 59, 59)
-    pruned = read_versioned_pruned(spark, root, "l_shipdate", lo=lo, hi=hi)
-    full = read_versioned(spark, root)
+    pruned = read_manifest_pruned(spark, root, "l_shipdate", lo=lo, hi=hi)
+    full = read_manifest(spark, root)
     assert len(pruned.inputFiles()) < len(full.inputFiles())
     want = full.filter(
         (F.col("l_shipdate") >= F.lit(lo)) & (F.col("l_shipdate") <= F.lit(hi))
@@ -279,9 +279,9 @@ def test_bm25_topk_formula_and_ranking(spark):
 def test_version_diff_types_and_null_safety(spark, tmp_path):
     """added/removed/changed classification, NULL-safe value compare, and
     include_unchanged."""
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        publish_version,
-        version_diff,
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        manifest_version_diff,
+        publish_files,
     )
 
     v1 = spark.createDataFrame(
@@ -291,17 +291,17 @@ def test_version_diff_types_and_null_safety(spark, tmp_path):
         [(2, "b"), (3, None), (4, "DD"), (5, "e")], "k long, v string"
     )
     root = str(tmp_path / "vd")
-    publish_version(spark, v1, root, keep_versions=3)
-    publish_version(spark, v2, root, keep_versions=3)
+    publish_files(spark, v1, root)
+    publish_files(spark, v2, root)
     out = {
         r["k"]: r["change_type"]
-        for r in version_diff(spark, root, 1, 2, keys=["k"]).collect()
+        for r in manifest_version_diff(spark, root, 1, 2, keys=["k"]).collect()
     }
     # 3 has NULL == NULL -> unchanged (excluded); 1 removed; 5 added; 4 changed
     assert out == {1: "removed", 4: "changed", 5: "added"}
     full = {
         r["k"]: r["change_type"]
-        for r in version_diff(
+        for r in manifest_version_diff(
             spark, root, 1, 2, keys=["k"], include_unchanged=True
         ).collect()
     }

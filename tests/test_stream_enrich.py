@@ -9,7 +9,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from stock_market_data_pipeline_spark.sinks.lake import publish_version
+from stock_market_data_pipeline_spark.sinks.manifest_lake import publish_files
 from stock_market_data_pipeline_spark.streaming.pipeline import (
     stream_dim_enrich,
     streaming_progress_stats,
@@ -32,7 +32,7 @@ def _run_enrich(spark, src, dim_root, out, ckpt):
 
 
 def test_stream_dim_enrich_tracks_published_versions(spark, tmp_path):
-    """Batch 0 joins dimension v1; after a mid-stream publish_version,
+    """Batch 0 joins dimension v1; after a mid-stream publish_files,
     batch 1 joins v2 — and a fact key absent from the dimension passes
     through with NULL (left join)."""
     dim_root = str(tmp_path / "dim")
@@ -40,22 +40,20 @@ def test_stream_dim_enrich_tracks_published_versions(spark, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
-    publish_version(
+    publish_files(
         spark,
         spark.createDataFrame([(1, "old1"), (2, "old2")], "k long, d string"),
         dim_root,
-        keep_versions=3,
     )
     spark.createDataFrame([(1, 10), (9, 90)], FACT_SCHEMA).coalesce(
         1
     ).write.mode("append").parquet(src)
     _run_enrich(spark, src, dim_root, out, ckpt)
 
-    publish_version(
+    publish_files(
         spark,
         spark.createDataFrame([(1, "NEW1"), (2, "NEW2")], "k long, d string"),
         dim_root,
-        keep_versions=3,
     )
     time.sleep(1.1)  # distinct mtime so the new file is a new offset
     spark.createDataFrame([(2, 20)], FACT_SCHEMA).coalesce(1).write.mode(

@@ -11,10 +11,13 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 _SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from collections import Counter
 import duckdb, math
 from pyspark.sql import SparkSession
@@ -61,7 +64,7 @@ print("VANILLA_OK")
 
 def test_driver_contract_on_vanilla_session():
     out = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, REPO],
         capture_output=True,
         text=True,
         timeout=420,

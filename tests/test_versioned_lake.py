@@ -1,21 +1,30 @@
-"""Manifest-committed (versioned) lake tables: marker-file commit protocol,
-crash-injection recovery, reader completeness, GC retention — the
-no-rename-window replacement for the directory-swap publish (r5 verdict #7).
+"""Versioned lake tables on the manifest format: marker-file commit
+protocol, crash-injection recovery, reader completeness, GC retention,
+keyed MERGE, compaction, time travel and copy-forward rollback.
 """
 
 from __future__ import annotations
+
+import json
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from stock_market_data_pipeline_spark.sinks.lake import (
-    _HadoopFS,
-    compact_versioned,
-    merge_upsert_versioned,
-    publish_version,
-    read_versioned,
-    resolve_version,
+from stock_market_data_pipeline_spark.sinks.lake import _HadoopFS
+from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+    _COMMIT_SUFFIX,
+    _data_dir,
+    _mf_dir,
+    _mf_name,
+    compact_manifest,
+    describe_manifest,
+    manifest_files,
+    merge_upsert_manifest,
+    publish_files,
+    read_manifest,
+    rollback_manifest,
+    vacuum_manifest,
 )
 
 
@@ -23,101 +32,113 @@ def _kv(spark, rows):
     return spark.createDataFrame(rows, "k long, v double, updated long")
 
 
+def _committed(spark, root):
+    return describe_manifest(spark, root)["committed_versions"]
+
+
+def _stage_uncommitted(spark, root, v):
+    """Crash injection: version ``v``'s JSON and its staged data file are
+    written, but the commit marker never is. The file is not parquet, so
+    a reader that resolved the orphan would fail."""
+    fs = _HadoopFS(spark, root)
+    name = f"crashed-{v}.parquet"
+    fs.write_text(f"{_data_dir(root)}/{name}", "junk")
+    fs.write_text(
+        f"{_mf_dir(root)}/{_mf_name(v)}",
+        json.dumps({"fmt": "parquet", "files": [{"name": name, "bytes": 4}]}),
+    )
+
+
 def test_publish_and_resolve(spark, tmp_path):
     root = str(tmp_path / "t")
-    assert resolve_version(spark, root) is None
-    publish_version(spark, _kv(spark, [(1, 1.0, 0)]), root)
-    assert resolve_version(spark, root).endswith("/v00000001")
-    assert read_versioned(spark, root).count() == 1
-    publish_version(spark, _kv(spark, [(1, 1.0, 0), (2, 2.0, 0)]), root)
-    assert resolve_version(spark, root).endswith("/v00000002")
-    assert read_versioned(spark, root).count() == 2
+    with pytest.raises(FileNotFoundError):
+        read_manifest(spark, root)
+    assert publish_files(spark, _kv(spark, [(1, 1.0, 0)]), root) == 1
+    assert describe_manifest(spark, root)["version"] == 1
+    assert read_manifest(spark, root).count() == 1
+    publish_files(spark, _kv(spark, [(1, 1.0, 0), (2, 2.0, 0)]), root)
+    assert describe_manifest(spark, root)["version"] == 2
+    assert read_manifest(spark, root).count() == 2
 
 
 def test_crash_before_marker_is_invisible_and_self_heals(spark, tmp_path):
-    """Kill between data write and commit: readers stay on the previous
-    complete version; the next publish GCs the orphan automatically."""
+    """Kill between manifest write and commit marker: readers stay on the
+    previous complete version; the next publish commits above the
+    orphan, and vacuum collects it."""
     root = str(tmp_path / "t")
-    publish_version(spark, _kv(spark, [(1, 1.0, 0)]), root)
+    publish_files(spark, _kv(spark, [(1, 1.0, 0)]), root)
 
-    # crash injection: a full data directory for v2 but NO commit marker
-    orphan = f"{root}/v00000002"
-    _kv(spark, [(9, 9.0, 9)]).write.parquet(orphan)
-    assert resolve_version(spark, root).endswith("/v00000001")
-    assert [r.k for r in read_versioned(spark, root).collect()] == [1]
+    _stage_uncommitted(spark, root, 2)
+    assert describe_manifest(spark, root)["version"] == 1
+    assert [r.k for r in read_manifest(spark, root).collect()] == [1]
 
-    # recovery needs no operator action: next publish skips past the orphan
-    # (max known + 1 = v3), commits, and deletes the crashed dir
-    publish_version(spark, _kv(spark, [(1, 1.0, 0), (2, 2.0, 0)]), root)
+    # recovery needs no operator action: the next publish skips past the
+    # orphan (max known + 1 = v3) and vacuum deletes it
+    assert publish_files(
+        spark, _kv(spark, [(1, 1.0, 0), (2, 2.0, 0)]), root
+    ) == 3
+    vacuum_manifest(spark, root, keep_versions=5, grace_seconds=0)
     fs = _HadoopFS(spark, root)
-    assert resolve_version(spark, root).endswith("/v00000003")
-    assert not fs.exists(orphan)
-    assert read_versioned(spark, root).count() == 2
+    assert not fs.exists(f"{_mf_dir(root)}/{_mf_name(2)}")
+    assert not fs.exists(f"{_data_dir(root)}/crashed-2.parquet")
+    assert _committed(spark, root) == [1, 3]
+    assert read_manifest(spark, root).count() == 2
 
 
 def test_reader_always_sees_complete_version_across_publishes(spark, tmp_path):
-    """The invariant the rename swap could not give: at every observable
-    point (including mid-'crash'), resolve_version returns a directory whose
-    contents are a complete, readable dataset."""
+    """At every observable point (including mid-'crash'), the latest
+    resolve names a committed manifest whose files are a complete,
+    readable dataset."""
     root = str(tmp_path / "t")
     for i in range(1, 5):
-        publish_version(
+        v = publish_files(
             spark, _kv(spark, [(k, float(k), i) for k in range(i)]), root
         )
-        path = resolve_version(spark, root)
-        assert path is not None
-        # the resolved dir has a _SUCCESS (Spark's own job commit) and reads
-        # back the full expected row count — never a partial write
         fs = _HadoopFS(spark, root)
-        assert fs.exists(f"{path}/_SUCCESS")
-        assert read_versioned(spark, root).count() == i
+        assert describe_manifest(spark, root)["version"] == v
+        assert fs.exists(f"{_mf_dir(root)}/{_mf_name(v)}{_COMMIT_SUFFIX}")
+        assert read_manifest(spark, root).count() == i
         # inject a crashed publish between every committed one
-        _kv(spark, [(99, 99.0, 99)]).write.parquet(
-            f"{root}/v{i * 10 + 5:08d}"
-        )
-        assert read_versioned(spark, root).count() == i  # still the committed one
+        _stage_uncommitted(spark, root, v + 1)
+        assert read_manifest(spark, root).count() == i  # still committed one
 
 
 def test_gc_keeps_retention_window(spark, tmp_path):
     root = str(tmp_path / "t")
     for i in range(1, 6):
-        publish_version(
-            spark, _kv(spark, [(1, float(i), i)]), root, keep_versions=2
-        )
+        publish_files(spark, _kv(spark, [(1, float(i), i)]), root)
+    res = vacuum_manifest(spark, root, keep_versions=2, grace_seconds=0)
+    assert res["manifests_deleted"] == 3
     fs = _HadoopFS(spark, root)
-    names = sorted(n for n in fs.child_names(root) if not n.endswith("._COMMITTED"))
-    assert names == ["v00000004", "v00000005"]  # newest + one rollback target
-    assert resolve_version(spark, root).endswith("/v00000005")
+    names = sorted(
+        n for n in fs.child_names(_mf_dir(root)) if n.endswith(".json")
+    )
+    assert names == ["v00000004.json", "v00000005.json"]
+    assert _committed(spark, root) == [4, 5]  # newest + one rollback target
+    assert {r.v for r in read_manifest(spark, root).collect()} == {5.0}
+    assert {r.v for r in read_manifest(spark, root, version=4).collect()} == {
+        4.0
+    }
 
 
 def test_merge_upsert_versioned_semantics(spark, tmp_path):
     root = str(tmp_path / "t")
-    merge_upsert_versioned(
-        spark,
-        _kv(spark, [(1, 1.0, 0), (2, 2.0, 0)]),
-        root,
-        keys=["k"],
-        order_col="updated",
-    )
-    merge_upsert_versioned(
-        spark,
-        _kv(spark, [(2, 22.0, 1), (3, 3.0, 1)]),
-        root,
-        keys=["k"],
-        order_col="updated",
-    )
-    got = {r.k: r.v for r in read_versioned(spark, root).collect()}
+
+    def merge(rows):
+        return merge_upsert_manifest(
+            spark, _kv(spark, rows), root, keys=["k"], order_col="updated",
+            n_buckets=4,
+        )
+
+    merge([(1, 1.0, 0), (2, 2.0, 0)])
+    merge([(2, 22.0, 1), (3, 3.0, 1)])
+    got = {r.k: r.v for r in read_manifest(spark, root).collect()}
     assert got == {1: 1.0, 2: 22.0, 3: 3.0}
 
     # idempotent replay: same batch again changes nothing but the version
-    merge_upsert_versioned(
-        spark,
-        _kv(spark, [(2, 22.0, 1), (3, 3.0, 1)]),
-        root,
-        keys=["k"],
-        order_col="updated",
-    )
-    assert {r.k: r.v for r in read_versioned(spark, root).collect()} == got
+    merge([(2, 22.0, 1), (3, 3.0, 1)])
+    assert describe_manifest(spark, root)["version"] == 3
+    assert {r.k: r.v for r in read_manifest(spark, root).collect()} == got
 
 
 def test_compact_versioned_no_missing_instant(spark, tmp_path):
@@ -128,71 +149,67 @@ def test_compact_versioned_no_missing_instant(spark, tmp_path):
         F.col("id").cast("double").alias("v"),
         F.lit(0).alias("updated"),
     ).repartition(16)
-    publish_version(spark, df, root)
-    before = resolve_version(spark, root)
-    stats = compact_versioned(spark, root, target_file_bytes=1 << 30)
-    assert stats["files_before"] == 16 and stats["files_after"] == 1
-    after = resolve_version(spark, root)
-    assert after != before
-    assert read_versioned(spark, root).count() == 1000
-    # old version retained as rollback target (keep_versions=2 default)
-    fs = _HadoopFS(spark, root)
-    assert fs.exists(before)
+    publish_files(spark, df, root)
+    assert len(manifest_files(spark, root)) == 16
+    stats = compact_manifest(spark, root, target_file_bytes=1 << 30)
+    assert stats["compacted"] == 16 and stats["files_written"] == 1
+    assert describe_manifest(spark, root)["version"] == 2
+    assert len(manifest_files(spark, root)) == 1
+    assert read_manifest(spark, root).count() == 1000
+    # the pre-compaction version stays readable until vacuumed
+    assert read_manifest(spark, root, version=1).count() == 1000
 
 
 def test_compact_versioned_requires_committed_version(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
-        compact_versioned(spark, str(tmp_path / "missing"))
+        compact_manifest(spark, str(tmp_path / "missing"))
 
 
 def test_time_travel_and_rollback(spark, tmp_path):
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        committed_versions,
-        rollback_version,
-    )
-
     root = str(tmp_path / "t")
-    publish_version(spark, _kv(spark, [(1, 1.0, 0)]), root, keep_versions=3)
-    publish_version(
-        spark, _kv(spark, [(1, 2.0, 1), (2, 2.0, 1)]), root, keep_versions=3
-    )
-    publish_version(spark, _kv(spark, [(1, 3.0, 2)]), root, keep_versions=3)
-    assert committed_versions(spark, root) == [1, 2, 3]
+    publish_files(spark, _kv(spark, [(1, 1.0, 0)]), root)
+    publish_files(spark, _kv(spark, [(1, 2.0, 1), (2, 2.0, 1)]), root)
+    publish_files(spark, _kv(spark, [(1, 3.0, 2)]), root)
+    assert _committed(spark, root) == [1, 2, 3]
 
     # time travel: each committed version reads back its own state
-    assert read_versioned(spark, root, version=1).count() == 1
-    assert read_versioned(spark, root, version=2).count() == 2
-    assert {r.v for r in read_versioned(spark, root, version=3).collect()} == {3.0}
+    assert read_manifest(spark, root, version=1).count() == 1
+    assert read_manifest(spark, root, version=2).count() == 2
+    assert {r.v for r in read_manifest(spark, root, version=3).collect()} == {
+        3.0
+    }
     # latest (no version) is v3
-    assert {r.v for r in read_versioned(spark, root).collect()} == {3.0}
+    assert {r.v for r in read_manifest(spark, root).collect()} == {3.0}
 
-    # GC'd / never-committed versions are unreachable with a clear error
-    with pytest.raises(KeyError, match="available"):
-        read_versioned(spark, root, version=9)
+    # never-committed versions are unreachable with a clear error
+    with pytest.raises(FileNotFoundError, match=r"have \[1, 2, 3\]"):
+        read_manifest(spark, root, version=9)
 
     # rollback = copy-forward re-publish: history stays linear (v4), the
     # restored state equals v2, and v3 remains inspectable
-    rollback_version(spark, root, 2)
-    assert committed_versions(spark, root)[-1] == 4
-    assert {(r.k, r.v) for r in read_versioned(spark, root).collect()} == {
+    assert rollback_manifest(spark, root, 2) == 4
+    assert _committed(spark, root)[-1] == 4
+    assert {(r.k, r.v) for r in read_manifest(spark, root).collect()} == {
         (1, 2.0),
         (2, 2.0),
     }
-    assert read_versioned(spark, root, version=3).count() == 1
+    assert read_manifest(spark, root, version=3).count() == 1
 
 
-def test_stale_marker_without_dir_is_gcd_and_rollback_errors_cleanly(spark, tmp_path):
-    from stock_market_data_pipeline_spark.sinks.lake import rollback_version
-
+def test_stale_marker_without_manifest_never_resolves_and_rollback_errors_cleanly(
+    spark, tmp_path
+):
     root = str(tmp_path / "t")
-    publish_version(spark, _kv(spark, [(1, 1.0, 0)]), root)
+    publish_files(spark, _kv(spark, [(1, 1.0, 0)]), root)
     fs = _HadoopFS(spark, root)
-    # out-of-band incident: marker survives, data dir deleted
-    fs.write_text(f"{root}/v00000002._COMMITTED", "v00000002")
-    assert resolve_version(spark, root).endswith("/v00000001")  # never resolves to it
-    publish_version(spark, _kv(spark, [(1, 2.0, 1)]), root)
-    # the stale marker is gone after one publish (self-healing holds)
-    assert not fs.exists(f"{root}/v00000002._COMMITTED")
+    # out-of-band incident: a marker survives, its manifest JSON deleted
+    fs.write_text(
+        f"{_mf_dir(root)}/{_mf_name(2)}{_COMMIT_SUFFIX}", _mf_name(2)
+    )
+    assert describe_manifest(spark, root)["version"] == 1
+    assert _committed(spark, root) == [1]
+    with pytest.raises(FileNotFoundError, match="not committed"):
+        read_manifest(spark, root, version=2)
     # rollback on an empty root errors with intent, not a Py4J crash
-    with pytest.raises(FileNotFoundError, match="nothing to roll back"):
-        rollback_version(spark, str(tmp_path / "empty"), 1)
+    with pytest.raises(FileNotFoundError, match="no committed manifest"):
+        rollback_manifest(spark, str(tmp_path / "empty"), 1)

@@ -516,13 +516,15 @@ def main() -> None:
     # ---- round-7 probe: bucketed CDC fold cost is O(touched buckets) ----
     # A constant 5-key batch merges into a 256-bucket table at 1x and 10x
     # rows. If the fold were O(table) the 10x merge would cost ~10x; with
-    # partition-pruned touched-bucket reads it must stay near-flat (the
-    # streaming weakness the round-7 rework removed).
+    # touched-bucket reads (only the touched buckets' manifest entries are
+    # opened) it must stay near-flat.
     import shutil as _shutil
     import tempfile as _tempfile
 
     from stock_market_data_pipeline_spark.operators.cdc import changelog_winners
-    from stock_market_data_pipeline_spark.sinks.lake import merge_upsert_bucketed
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        merge_upsert_manifest,
+    )
 
     def _cdc_fold_sec(n_rows: int) -> float:
         root = _tempfile.mkdtemp(prefix="smdp_skew_cdc_")
@@ -536,7 +538,7 @@ def main() -> None:
             reducer = lambda df: changelog_winners(  # noqa: E731
                 df, ["k"], "seq", op_col="op", delete_op="delete"
             )
-            merge_upsert_bucketed(
+            merge_upsert_manifest(
                 spark, seed, root, keys=["k"], order_col="seq",
                 n_buckets=256, reducer=reducer,
             )
@@ -547,12 +549,12 @@ def main() -> None:
                 F.lit(1.5).alias("v"),
             )
             t0 = time.perf_counter()
-            touched = merge_upsert_bucketed(
+            touched = merge_upsert_manifest(
                 spark, batch, root, keys=["k"], order_col="seq",
                 n_buckets=256, reducer=reducer,
-            )
+            )["touched_buckets"]
             t = round(time.perf_counter() - t0, 3)
-            assert len(touched) <= 5
+            assert touched <= 5
             return t
         finally:
             _shutil.rmtree(root, ignore_errors=True)

@@ -11,7 +11,8 @@ ahead of any sink (or inside foreachBatch on a stream).
 Scale shape: ONE shuffle keyed by the primary key; the window computes the
 winner without a self-join; no driver participation. At 100 TB the input
 is naturally the recent changelog partition, not the whole history —
-compose with the bucketed MERGE sinks for the table-sized fold.
+compose with the keyed MERGE (``merge_upsert_manifest``) for the
+table-sized fold.
 """
 
 from __future__ import annotations
@@ -74,26 +75,18 @@ def read_cdc_state(
     op_col: str = "op",
     delete_op: str = "delete",
 ) -> DataFrame:
-    """Live rows of a table materialized by
-    ``streaming/pipeline.py:stream_apply_changelog`` (either mode).
+    """Live rows of the manifest table materialized by
+    ``streaming/pipeline.py:stream_apply_changelog``.
 
     The stored table keeps ``op_col``/``seq_col`` bookkeeping so folds stay
     seq-aware across micro-batches (tombstones persist as rows); this
-    reader hides that: read the latest committed version when the root
-    is a manifest table (else read the bucketed layout directly), drop
-    tombstone rows, and strip the op / bucket bookkeeping columns. The
-    sequence column stays — it is real data (the row's version).
+    reader hides that: read the latest committed version, drop tombstone
+    rows and the op column. The sequence column stays — it is real data
+    (the row's version).
     """
-    from stock_market_data_pipeline_spark.sinks.lake import BUCKET_COL
     from stock_market_data_pipeline_spark.sinks.manifest_lake import (
         read_manifest,
     )
 
-    try:
-        df = read_manifest(spark, table_root)
-    except FileNotFoundError:  # no committed manifest: bucketed layout
-        df = spark.read.parquet(table_root)
-    live = df.filter(F.col(op_col) != delete_op).drop(op_col)
-    if BUCKET_COL in live.columns:
-        live = live.drop(BUCKET_COL)
-    return live
+    df = read_manifest(spark, table_root)
+    return df.filter(F.col(op_col) != delete_op).drop(op_col)

@@ -2,23 +2,24 @@
 production shape of exact dedup for a training-data pipeline that ingests
 batches continuously instead of re-scanning the whole corpus.
 
-A bucketed parquet store holds one row per content fingerprint ever seen
-(``fingerprint`` md5, ``canonical_id``). Each new batch is:
+A manifest table, bucketed by fingerprint, holds one row per content
+fingerprint ever seen (``fingerprint`` md5, ``canonical_id``). Each new
+batch is:
 
 1. fingerprinted (md5 of normalized text — same canonical form as
    :func:`..operators.dedup.dedup_exact_text`);
-2. classified against the store with a bucket-pruned lookup join — only the
-   store buckets the batch's fingerprints hash into are read, so a small
-   batch against a 100-TB-corpus store touches O(batch) data, never the
-   whole store;
-3. the batch's novel fingerprints are merged back via the bucketed
-   dynamic-overwrite MERGE (:func:`..sinks.lake.merge_upsert_bucketed`),
-   which rewrites only the touched buckets.
+2. classified against the store with a bucket-pruned lookup join —
+   :func:`..sinks.manifest_lake.read_touched_buckets` opens only the files
+   of the buckets the batch's fingerprints hash into, so a small batch
+   against a 100-TB-corpus store touches O(batch) data, never the whole
+   store;
+3. the batch's novel fingerprints are merged back via the keyed MERGE
+   (:func:`..sinks.manifest_lake.merge_upsert_manifest`), which rewrites
+   only the touched buckets and commits a new store version.
 
 This composes dedup + K6 exactly like the reference's incremental
-load-then-MERGE loop (`/root/reference/src/snowflake/scripts/
-load_to_snowflake.py:212-229`), with the warehouse MERGE replaced by the
-lake-native bucketed merge.
+load-then-MERGE loop (``load_to_snowflake.py:212-229``), with the
+warehouse MERGE replaced by the lake-native keyed merge.
 
 Idempotence: re-merging the same batch adds nothing — the merge dedups per
 fingerprint keep-last on a stable order column, so replays (at-least-once
@@ -26,9 +27,10 @@ upstream delivery, job retries) are safe.
 
 Ordering contract: classification is pinned (localCheckpoint) BEFORE the
 store update runs, because the lazy classified plan reads store files the
-merge is about to rewrite. In production the classified batch is written to
-the lake first, then the store updated — same write-then-merge ordering,
-durable instead of session-cached.
+merge is about to supersede (and a later vacuum deletes). In production
+the classified batch is written to the lake first, then the store
+updated — same write-then-merge ordering, durable instead of
+session-cached.
 """
 
 from __future__ import annotations
@@ -37,10 +39,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_market_data_pipeline_spark.operators.dedup import normalize_text
-from stock_market_data_pipeline_spark.sinks.lake import (
-    BUCKET_COL,
-    _HadoopFS,
-    merge_upsert_bucketed,
+from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+    merge_upsert_manifest,
+    read_touched_buckets,
 )
 
 STORE_KEY = "fingerprint"
@@ -69,7 +70,7 @@ def seed_fingerprint_store(
         .agg(F.min("canonical_id").alias("canonical_id"))
         .withColumn("first_batch_id", F.lit(batch_id).cast("bigint"))
     )
-    merge_upsert_bucketed(
+    merge_upsert_manifest(
         spark,
         fps,
         store_path,
@@ -105,32 +106,23 @@ def incremental_dedup_batch(
     novel/dup_in_batch exactly as the first attempt did. ``None`` keeps
     plain presence semantics for one-shot batch jobs.
 
-    100 TB posture: the lookup join reads only the store buckets the batch
-    hashes into (partition-pruned scan on the bucket column); the store
-    update rewrites only those buckets. The batch never shuffles against
-    the full store.
+    100 TB posture: the lookup join reads only the store files of the
+    buckets the batch hashes into; the store update rewrites only those
+    buckets. The batch never shuffles against the full store.
     """
-    fs = _HadoopFS(spark, store_path)
     fp = batch.select(
         F.col(id_col).alias("doc_id"),
         F.md5(normalize_text(text_col)).alias(STORE_KEY),
     )
-    from stock_market_data_pipeline_spark.sinks.lake import _bucket_expr
-
-    fp = fp.withColumn(BUCKET_COL, _bucket_expr([STORE_KEY], n_buckets))
-    has_store = fs.is_dir(store_path) and any(
-        n.startswith(f"{BUCKET_COL}=") for n in fs.child_names(store_path)
-    )
-    if has_store:
-        touched = sorted(
-            r[0] for r in fp.select(BUCKET_COL).distinct().collect()
+    store = read_touched_buckets(spark, store_path, fp, [STORE_KEY], n_buckets)
+    if store is not None:
+        looked = fp.join(
+            store.select(
+                STORE_KEY, F.col("first_batch_id").alias("_store_batch")
+            ),
+            STORE_KEY,
+            "left",
         )
-        store = (
-            spark.read.parquet(store_path)
-            .filter(F.col(BUCKET_COL).isin(touched))
-            .select(STORE_KEY, F.col("first_batch_id").alias("_store_batch"))
-        )
-        looked = fp.join(store, STORE_KEY, "left")
     else:
         looked = fp.withColumn("_store_batch", F.lit(None).cast("bigint"))
     prior = (
@@ -149,8 +141,8 @@ def incremental_dedup_batch(
             .otherwise(F.lit("dup_in_batch"))
             .alias("status"),
         )
-        # Pin the pre-merge classification: the merge below rewrites the very
-        # store files this lazy plan reads.
+        # Pin the pre-merge classification: the merge below supersedes the
+        # very store files this lazy plan reads.
         .localCheckpoint(eager=True)
     )
     novel = (
@@ -163,7 +155,7 @@ def incremental_dedup_batch(
             .alias("first_batch_id"),
         )
     )
-    merge_upsert_bucketed(
+    merge_upsert_manifest(
         spark,
         novel,
         store_path,

@@ -190,11 +190,7 @@ def ohlcv_partial(
     )
 
 
-def combine_ohlcv_partials(
-    parts: DataFrame,
-    key: str = "symbol",
-    extra_group: tuple[str, ...] = (),
-) -> DataFrame:
+def combine_ohlcv_partials(parts: DataFrame, key: str = "symbol") -> DataFrame:
     """Reduce any number of overlapping partial states to one row per
     (key, date): min/max/sum fold trivially; open/close pick the partial
     at the extreme timestamp. Associative + commutative, so increments can
@@ -204,7 +200,7 @@ def combine_ohlcv_partials(
     # boundary land in different increments): open resolves to the LOWEST
     # price among tied-earliest partials, close to the HIGHEST among
     # tied-latest — stable across runs and engines (round-7 review).
-    return parts.groupBy(*extra_group, key, "date").agg(
+    return parts.groupBy(key, "date").agg(
         F.min("first_ts").alias("first_ts"),
         F.max("last_ts").alias("last_ts"),
         F.min_by(
@@ -229,38 +225,38 @@ def merge_daily_ohlcv(
     price: str = "price",
     volume: str = "volume",
     n_buckets: int = 64,
-) -> list[int]:
+) -> dict[str, int]:
     """Incremental materialized-rollup maintenance (X99): fold a tick
-    increment into a persistent bucketed daily-OHLCV store WITHOUT
+    increment into a persistent daily-OHLCV manifest table WITHOUT
     re-reading history — the warehouse-rollup refresh the reference's
     daily contract implies, as a pure lake operation.
 
     Each refresh aggregates ONLY the increment (map-side combined to
     |symbols|×|days| partial rows), then merges through
-    :func:`..sinks.lake.merge_upsert_bucketed` with
+    :func:`..sinks.manifest_lake.merge_upsert_manifest` with
     :func:`combine_ohlcv_partials` as the reducer — so a refresh rewrites
-    only the (symbol, date) buckets the increment touches, and the merge
-    combines overlapping days instead of overwriting them. At 100 TB/day
-    the refresh cost is O(increment + touched buckets), never O(history).
+    only the (symbol, date) key buckets the increment touches, and the
+    merge combines overlapping days instead of overwriting them. At
+    100 TB/day the refresh cost is O(increment + touched buckets), never
+    O(history).
 
-    Returns the rewritten bucket ids. Read the store with a plain parquet
-    scan; finalize ``daily_change`` downstream (intraday or
-    close-over-close — both are projections over the tiny state table).
+    Returns the merge's counts (``touched_buckets``, ``carried_files``,
+    ``rewritten_files``). Read the store with
+    :func:`..sinks.manifest_lake.read_manifest`; finalize ``daily_change``
+    downstream (intraday or close-over-close — both are projections over
+    the tiny state table).
     """
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        BUCKET_COL,
-        merge_upsert_bucketed,
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        merge_upsert_manifest,
     )
 
     parts = ohlcv_partial(ticks, key=key, ts=ts, price=price, volume=volume)
-    return merge_upsert_bucketed(
+    return merge_upsert_manifest(
         spark,
         parts,
         store_path,
         keys=[key, "date"],
         order_col="last_ts",
         n_buckets=n_buckets,
-        reducer=lambda df: combine_ohlcv_partials(
-            df, key=key, extra_group=(BUCKET_COL,)
-        ),
+        reducer=lambda df: combine_ohlcv_partials(df, key=key),
     )

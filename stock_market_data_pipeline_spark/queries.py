@@ -832,18 +832,22 @@ def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental corpus dedup vs a persistent bucketed fingerprint store:
-    seed the store from the doc_id%3==0 slice (the "already ingested"
-    history), classify the rest as a new batch (novel / dup_in_batch /
-    dup_of_store) with a bucket-pruned lookup, merge the novel fingerprints
-    back, and prove completeness — every batch fingerprint must be present
-    after the merge (oracle pins the flag at literal 1)."""
+    """Incremental corpus dedup vs a persistent fingerprint store (a
+    manifest table bucketed by fingerprint): seed the store from the
+    doc_id%3==0 slice (the "already ingested" history), classify the rest
+    as a new batch (novel / dup_in_batch / dup_of_store) with a
+    bucket-pruned lookup, merge the novel fingerprints back, and prove
+    completeness — every batch fingerprint must be present after the
+    merge (oracle pins the flag at literal 1)."""
     import tempfile
 
     from stock_market_data_pipeline_spark.operators.incremental import (
         STORE_KEY,
         incremental_dedup_batch,
         seed_fingerprint_store,
+    )
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        read_manifest,
     )
 
     import shutil
@@ -855,7 +859,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         classified = incremental_dedup_batch(
             spark, docs.filter(F.col("doc_id") % 3 != 0), store
         )
-        after = spark.read.parquet(store).select(
+        after = read_manifest(spark, store).select(
             STORE_KEY, F.lit(1).alias("_after")
         )
         # Materialize before the finally deletes the store the plan reads
@@ -1961,24 +1965,27 @@ def q_incremental_ohlcv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized OHLCV (X99): the tick stream splits into
     two increments by ``volume % 2`` — every trading day is split ACROSS
     both increments, so each refresh must merge partial days, not
-    overwrite them — folded one after the other into a bucketed store.
-    The final store state must equal the one-shot full rollup (the
-    oracle), proving the algebraic combine (first_ts/last_ts-keyed
-    open/close, min/max/sum folds) is exact under out-of-order refresh."""
+    overwrite them — folded one after the other into a manifest table
+    through the keyed MERGE with the OHLCV combine as its reducer. The
+    final store state must equal the one-shot full rollup (the oracle),
+    proving the algebraic combine (first_ts/last_ts-keyed open/close,
+    min/max/sum folds) is exact under out-of-order refresh."""
     import shutil
     import tempfile
 
     from stock_market_data_pipeline_spark.operators.ohlcv import (
         merge_daily_ohlcv,
     )
-    from stock_market_data_pipeline_spark.sinks.lake import BUCKET_COL
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        read_manifest,
+    )
 
     t = ticks_from_events(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="smdp_inc_ohlcv_")
     try:
         merge_daily_ohlcv(spark, t.filter(F.col("volume") % 2 == 0), root)
         merge_daily_ohlcv(spark, t.filter(F.col("volume") % 2 == 1), root)
-        state = spark.read.parquet(root).drop(BUCKET_COL)
+        state = read_manifest(spark, root)
         out = state.select(
             "symbol",
             "date",
@@ -2046,7 +2053,8 @@ def q_dead_letter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_stream_parity_conf
 def q_stream_cdc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC (bucketed mode) as a driver-visible parity query: the
+    """Streaming CDC (the keyed manifest MERGE with ``changelog_winners``
+    as reducer, 16 key buckets) as a driver-visible parity query: the
     event changelog splits into two micro-batches by ``event_id % 2`` — so
     sequence numbers INTERLEAVE across batches, i.e. every batch delivers
     events "late" relative to the other — and the final live state after
@@ -2095,7 +2103,6 @@ def q_stream_cdc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             seq_col="seq",
             checkpoint_path=ckpt,
             trigger={"availableNow": True},
-            mode="bucketed",
             n_buckets=16,
         )
         _await_stream(q)

@@ -1,4 +1,4 @@
-"""Lake sinks: Hive-partitioned writes (K1/K2/K5) + MERGE-style upsert (K6).
+"""Lake sinks: Hive-partitioned writes (K1/K2/K5) and the filesystem layer.
 
 Reference parity:
 
@@ -17,13 +17,11 @@ Reference parity:
   Spark's partitionBy produces the same Hive layout and partition-pruned
   reads come free.
 * K6 — warehouse MERGE upsert (``load_to_snowflake.py:186-231``: temp stage →
-  ``MERGE ... WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT``). Without a
-  warehouse, :func:`merge_upsert` implements the same last-writer-wins
-  semantics on parquet: union existing ∪ incoming, keep the greatest
-  ``order_col`` per key, publish via staging-directory swap. Semantics are
-  batch-atomic, single-writer (documented; SURVEY §7 hard-part #5) — the
-  production path on a real lake is Delta/Iceberg ``MERGE INTO``, which this
-  function's signature mirrors so swapping the implementation is one line.
+  ``MERGE ... WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT``) lives in the
+  manifest format: ``manifest_lake.merge_upsert_manifest`` is the one keyed
+  MERGE (last-writer-wins per key, O(touched key buckets), marker-file
+  commit). This module keeps the filesystem layer it commits through
+  (:class:`_HadoopFS`, the commit locks) and the plain partitioned writes.
 """
 
 from __future__ import annotations
@@ -35,8 +33,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from stock_market_data_pipeline_spark.operators.dedup import dedup_keep_last
 
 
 class LockUnavailableError(RuntimeError):
@@ -281,14 +277,13 @@ def hold_commit_scope(key: str):
 
 class _HadoopFS:
     """Thin wrapper over Hadoop's FileSystem API (via the session JVM) so the
-    merge sinks work against any scheme Spark can write — file://, hdfs://,
+    table sinks work against any scheme Spark can write — file://, hdfs://,
     s3a://, abfs:// — instead of being local-FS-only through ``os``/``shutil``.
 
     One caveat object stores can't hide: ``rename`` is atomic on HDFS and
-    POSIX filesystems but is copy+delete on S3A — callers that need an atomic
-    publish on object stores should use :func:`merge_upsert_bucketed` (dynamic
-    partition overwrite rides Spark's committer) rather than the
-    rename-swapping flat :func:`merge_upsert`.
+    POSIX filesystems but is copy+delete on S3A — which is why the manifest
+    format commits by create-exclusive marker files, not by renaming a
+    table directory into place.
     """
 
     def __init__(self, spark: SparkSession, path: str) -> None:
@@ -558,234 +553,6 @@ def with_date_partitions(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
         .withColumn("day", F.dayofmonth(ts_col))
         .withColumn("hour", F.hour(ts_col))
     )
-
-
-def merge_upsert(
-    spark: SparkSession,
-    incoming: DataFrame,
-    path: str,
-    keys: list[str],
-    order_col: str,
-) -> None:
-    """MERGE-semantics upsert into a parquet table (last writer wins per key).
-
-    Equivalent to the reference's stage+MERGE with ``keep='last'`` dedup
-    (``load_to_snowflake.py:154,212-229``): rows in ``incoming`` replace
-    existing rows with the same key when their ``order_col`` is greater;
-    within a batch the greatest ``order_col`` (tiebroken arbitrarily only if
-    exactly equal) survives.
-
-    Publication is a staging-dir write + directory swap — readers never see a
-    half-written table; concurrent *writers* are out of scope (single-writer,
-    like the reference's loader). All filesystem traffic goes through
-    Hadoop's FileSystem API, so the same code runs against file://, hdfs://,
-    s3a://, or abfs:// paths. The rename swap is atomic on HDFS/POSIX but
-    copy+delete on object stores — at scale on S3-like storage prefer
-    :func:`merge_upsert_bucketed` (publish rides Spark's committer) or
-    ``manifest_lake.merge_upsert_manifest`` (marker-file commit, no rename
-    at all, no missing-directory instant).
-    """
-    fs = _HadoopFS(spark, path)
-    exists = fs.is_dir(path) and any(
-        n.endswith(".parquet") or n.startswith("part-") or n.startswith("_")
-        for n in fs.child_names(path)
-    )
-    if exists:
-        current = spark.read.parquet(path)
-        merged = current.unionByName(incoming, allowMissingColumns=True)
-    else:
-        merged = incoming
-    deduped = dedup_keep_last(merged, keys=keys, order=[order_col])
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-    deduped.write.mode("overwrite").parquet(staging)
-    # Publish via two renames, never a delete-then-rename: the table is only
-    # absent for the instant between the two renames, and a crash in that
-    # window leaves both the old dir (aside) and the staging dir intact —
-    # nothing committed is ever the only copy in a directory about to be
-    # deleted.
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    if fs.is_dir(path):
-        fs.rename(path, old)
-    fs.rename(staging, path)
-    fs.delete(old)
-
-
-BUCKET_COL = "key_bucket"
-_BUCKET_SPEC = "_merge_bucket_spec.json"
-
-
-def _bucket_expr(keys: list[str], n_buckets: int) -> F.Column:
-    return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
-
-
-def merge_upsert_bucketed(
-    spark: SparkSession,
-    incoming: DataFrame,
-    path: str,
-    keys: list[str],
-    order_col: str,
-    n_buckets: int = 64,
-    reducer: "Callable[[DataFrame], DataFrame] | None" = None,
-) -> list[int]:
-    """MERGE-semantics upsert that rewrites only the key buckets the incoming
-    batch touches — the scale-safe form of :func:`merge_upsert` without a
-    table format.
-
-    The table is Hive-partitioned by ``key_bucket = pmod(hash(keys), N)``
-    (every row of a key lands in exactly one bucket, so keep-last dedup stays
-    bucket-local). A merge then:
-
-    1. computes the incoming batch's touched buckets (≤ N values — a bounded
-       collect, not a data-sized one);
-    2. reads ONLY those partitions back (Catalyst partition-prunes the scan —
-       the filter is on the partition column);
-    3. dedups union(current-touched, incoming) per key, keep-last;
-    4. overwrites only those partition directories via dynamic partition
-       overwrite (writer-scoped option, no session conf mutation).
-
-    A small batch therefore rewrites O(touched buckets / N) of the table
-    instead of all of it, and never through a local-FS rename API — dynamic
-    partition overwrite is Spark's commit protocol, which works on
-    S3A/HDFS/ABFS exactly as on local disk. At 100 TB with 4096 buckets, a
-    micro-batch touching 10 keys rewrites ≤ 10 buckets ≈ 0.2% of the table.
-    The production path with concurrent writers/readers is still Delta or
-    Iceberg ``MERGE INTO`` (snapshot isolation); this keeps the
-    single-writer contract of the reference's loader.
-
-    ``reducer`` replaces the default keep-last-by-``order_col`` winner rule
-    with a custom per-key fold over union(current-touched, incoming) — e.g.
-    the streaming CDC sink passes ``changelog_winners`` so delete
-    tombstones and seq-tie preference apply inside the bucket merge. The
-    reducer must preserve the ``key_bucket`` column (any one-row-per-key
-    window/filter does: the bucket is a pure function of the keys).
-
-    Returns the sorted list of bucket ids rewritten (for tests/observability).
-
-    Reference parity: same MERGE semantics as ``load_to_snowflake.py:186-231``
-    staged into a warehouse; see also :mod:`..sinks.warehouse` for the
-    warehouse-side twin.
-    """
-    import json
-
-    fs = _HadoopFS(spark, path)
-    spec_path = f"{path.rstrip('/')}/{_BUCKET_SPEC}"
-    has_spec = fs.is_file(spec_path)
-    has_data = fs.is_dir(path) and any(
-        name.startswith(f"{BUCKET_COL}=") for name in fs.child_names(path)
-    )
-    # Existence is decided by DATA, and data without a spec is refused, not
-    # treated as a fresh table: the exists=False branch skips reading the
-    # current rows, so mistaking an existing table for a new one would make
-    # dynamic overwrite silently DELETE every pre-existing key in the
-    # touched buckets (spec lost to a crash window or metadata cleanup, or
-    # the directory was written by the flat merge_upsert).
-    if has_data and not has_spec:
-        raise ValueError(
-            f"table at {path} has bucket partitions but no {_BUCKET_SPEC}; "
-            f"refusing to merge blindly — restore the spec "
-            f'({{"keys": [...], "n_buckets": N}}) or rebuild the table'
-        )
-    if has_spec:
-        spec = json.loads(fs.read_text(spec_path))
-        if spec["keys"] != keys or spec["n_buckets"] != n_buckets:
-            raise ValueError(
-                f"table at {path} was bucketed with {spec}; "
-                f"got keys={keys} n_buckets={n_buckets}"
-            )
-
-    bucketed_in = incoming.withColumn(BUCKET_COL, _bucket_expr(keys, n_buckets))
-    touched = sorted(
-        r[0] for r in bucketed_in.select(BUCKET_COL).distinct().collect()
-    )
-    if has_data:
-        current = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin(touched))
-        merged = current.unionByName(bucketed_in, allowMissingColumns=True)
-    else:
-        merged = bucketed_in
-
-    deduped = (
-        reducer(merged)
-        if reducer is not None
-        else dedup_keep_last(merged, keys=keys, order=[order_col])
-    )
-    (
-        deduped.repartition(F.col(BUCKET_COL))  # one task → one file per bucket
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BUCKET_COL)
-        .parquet(path)
-    )
-    if not has_spec:
-        fs.write_text(
-            spec_path, json.dumps({"keys": keys, "n_buckets": n_buckets})
-        )
-    return touched
-
-
-def compact_cdc_tombstones(
-    spark: SparkSession,
-    path: str,
-    op_col: str = "op",
-    delete_op: str = "delete",
-    seq_col: str | None = None,
-    before_seq: int | None = None,
-) -> list[int]:
-    """Retention maintenance for a bucketed CDC table
-    (``streaming/pipeline.py:stream_apply_changelog`` mode="bucketed"):
-    physically drop tombstone rows, rewriting ONLY the buckets that hold
-    any.
-
-    ``before_seq`` (with ``seq_col``) keeps recent tombstones: dropping a
-    tombstone re-opens its key to late lower-seq upserts, so the cutoff is
-    the CDC analogue of Cassandra's gc_grace — set it below the oldest
-    sequence number still in flight. ``before_seq=None`` drops them all
-    (safe once the upstream log is fully drained).
-
-    Buckets whose every row was a tombstone end up empty; dynamic
-    partition overwrite never touches a partition it has no rows for, so
-    those directories are deleted explicitly. Run inside the table's
-    single-writer window (same contract as the merge itself).
-
-    Returns the sorted bucket ids rewritten or removed.
-    """
-    df = spark.read.parquet(path)
-    # coalesce: a NULL op must read as "not a tombstone" (keep), not NULL —
-    # a bare == would exclude the row from BOTH cond and ~cond, silently
-    # dropping it from the rewrite of any touched bucket (round-7 ADVICE,
-    # the op-column twin of the NULL-seq fix below).
-    cond = F.coalesce(F.col(op_col) == delete_op, F.lit(False))
-    if before_seq is not None:
-        if seq_col is None:
-            raise ValueError("before_seq needs seq_col")
-        # coalesce: a NULL seq must read as "not old enough" (keep), not
-        # NULL — a bare < would exclude the row from BOTH cond and ~cond,
-        # silently losing the tombstone in the rewrite (round-7 review).
-        cond = cond & F.coalesce(
-            F.col(seq_col) < before_seq, F.lit(False)
-        )
-    touched = sorted(
-        r[0] for r in df.filter(cond).select(BUCKET_COL).distinct().collect()
-    )
-    if not touched:
-        return []
-    kept = df.filter(F.col(BUCKET_COL).isin(touched)).filter(~cond)
-    survivors = {
-        r[0]
-        for r in kept.select(BUCKET_COL).distinct().collect()
-    }
-    if survivors:
-        (
-            kept.repartition(F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
-    fs = _HadoopFS(spark, path)
-    for b in touched:
-        if b not in survivors:
-            fs.delete(f"{path.rstrip('/')}/{BUCKET_COL}={b}")
-    return touched
 
 
 def compact_small_files(

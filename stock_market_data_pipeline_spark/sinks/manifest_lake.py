@@ -85,7 +85,7 @@ import logging
 import re
 import time as _time
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1491,9 +1491,22 @@ def _commit_locked(
         # require the marker) for write-audit-publish; the caller
         # promotes via _promote_manifest or abandons it to vacuum
         if write_marker:
-            fs.write_text_exclusive(
-                f"{mpath}{_COMMIT_SUFFIX}", _mf_name(nxt)
-            )
+            try:
+                fs.write_text_exclusive(
+                    f"{mpath}{_COMMIT_SUFFIX}", _mf_name(nxt)
+                )
+            except FileExistsError:
+                # this writer's exclusive JSON create above succeeded, so
+                # no other writer can have committed this slot: the
+                # marker is an orphan whose JSON was deleted out of band,
+                # and it now commits this writer's content. Raising here
+                # would report a lost race for a version that reads as
+                # committed; skipping the slot would leave a gap that
+                # stops the pointer's forward probe.
+                _log.warning(
+                    "orphan commit marker at %s%s: committed v%d over it",
+                    mpath, _COMMIT_SUFFIX, nxt,
+                )
     except (FileExistsError, LockUnavailableError) as exc:
         # LockUnavailableError comes from a LeaseCommitLock adapter under
         # contention (sinks/lake.py:install_commit_lock); mapping it here
@@ -4819,6 +4832,80 @@ def _bucket_expr(keys: list[str], n_buckets: int):
     return sample_hash32(key, seed="mfb") % n_buckets
 
 
+def _split_buckets(
+    meta: dict,
+    root: str,
+    entries: list[dict[str, Any]],
+    frame: DataFrame,
+    keys: list[str],
+    n_buckets: int,
+    op: str,
+    require_layout: bool = True,
+) -> tuple[DataFrame, set[int], list[dict[str, Any]], list[dict[str, Any]]]:
+    """The key-bucket split behind every keyed operation: check the
+    table's recorded layout against ``(keys, n_buckets)`` (bucket
+    membership is hash-derived, so another layout would scatter keys
+    across incompatible tags), tag ``frame`` with each row's bucket
+    (localCheckpoint-ed: it is evaluated here and again downstream),
+    collect the touched bucket ids, and split ``entries`` into carried
+    and touched — an entry without a bucket tag counts as touched.
+    ``require_layout=False`` admits a table with no recorded layout (the
+    first merge buckets it). Returns ``(tagged frame, touched ids,
+    carried entries, touched entries)``."""
+    bk = meta.get("bucketing")
+    if (bk or require_layout) and (
+        not bk
+        or list(bk["keys"]) != list(keys)
+        or int(bk["n_buckets"]) != n_buckets
+    ):
+        raise ValueError(
+            f"table at {root} is bucketed as {bk}; {op} called with "
+            f"keys={keys} n_buckets={n_buckets} — the bucket layout is "
+            "fixed per table (build it via merge_upsert_manifest, change "
+            "it via publish_files)"
+        )
+    tagged = frame.withColumn(
+        _BUCKET, _bucket_expr(keys, n_buckets)
+    ).localCheckpoint(eager=False)
+    touched = {r[0] for r in tagged.select(_BUCKET).distinct().collect()}
+    carried: list[dict[str, Any]] = []
+    hit: list[dict[str, Any]] = []
+    for e in entries:  # single pass, not O(n^2) list membership
+        if e.get("bucket") is not None and e["bucket"] not in touched:
+            carried.append(e)
+        else:
+            hit.append(e)
+    return tagged, touched, carried, hit
+
+
+def read_touched_buckets(
+    spark: SparkSession,
+    root: str,
+    probe: DataFrame,
+    keys: list[str],
+    n_buckets: int,
+) -> DataFrame | None:
+    """Rows of the latest committed version that live in the key buckets
+    ``probe``'s keys hash into: the bucket-pruned lookup read of a table
+    built by :func:`merge_upsert_manifest`. Only the touched buckets'
+    files are opened (deletion vectors apply as on every read), so a
+    small probe against a large table reads O(probe) data. Returns
+    ``None`` when nothing is committed at ``root``."""
+    fs = _HadoopFS(spark, root)
+    try:
+        _, meta = _resolve_manifest(fs, root, None)
+    except FileNotFoundError:
+        return None
+    _, _, _, hit = _split_buckets(
+        meta, root, _manifest_entries(fs, root, meta),
+        probe.select(*keys), keys, n_buckets, "read_touched_buckets",
+    )
+    if not hit:
+        return spark.createDataFrame([], _recorded_schema(meta))
+    paths = list(_entry_paths(root, hit).values())
+    return _load_table_files(spark, meta, paths, root)
+
+
 def _stage_bucketed(
     spark: SparkSession,
     df: DataFrame,
@@ -4886,6 +4973,7 @@ def merge_upsert_manifest(
     n_buckets: int = 64,
     fmt: str = "parquet",
     txn_id: tuple[str, int] | None = None,
+    reducer: Callable[[DataFrame], DataFrame] | None = None,
 ) -> dict[str, int]:
     """Keyed MERGE (last-writer-wins per key by ``order_col``) on the
     manifest format at O(touched buckets): files are tagged with a
@@ -4912,6 +5000,12 @@ def merge_upsert_manifest(
     passes could land rows in buckets whose old files were already
     carried, committing stale duplicate keys (round-9 advice).
 
+    ``reducer`` replaces the keep-last-by-``order_col`` rule with a
+    custom per-key fold over union(current rows of the touched buckets,
+    incoming); the rows it sees carry no bucket column. The streaming CDC
+    fold passes ``changelog_winners`` (tombstones and the seq-tie rule),
+    and the incremental OHLCV rollup passes ``combine_ohlcv_partials``.
+
     Returns ``{"touched_buckets", "carried_files", "rewritten_files"}``.
     """
     from stock_market_data_pipeline_spark.operators.dedup import (
@@ -4930,14 +5024,6 @@ def merge_upsert_manifest(
         prev_entries = _manifest_entries(fs, root, meta)
         txns = dict(meta.get("txns") or {})
         fmt = meta.get("fmt", fmt)
-        bk = meta.get("bucketing")
-        if bk and (list(bk["keys"]) != list(keys)
-                   or int(bk["n_buckets"]) != n_buckets):
-            raise ValueError(
-                f"table at {root} is bucketed as {bk}; merge called with "
-                f"keys={keys} n_buckets={n_buckets} — bucket layout is "
-                "immutable per table (rewrite via publish_files to change)"
-            )
     if txn_id is not None:
         app, n = txn_id
         if txns.get(app) is not None and int(txns[app]) >= n:
@@ -4965,21 +5051,13 @@ def merge_upsert_manifest(
     evolved_sj = (
         _evolved_schema_json(meta, inc0) if meta.get("schema") else None
     )
-    inc = inc0.withColumn(
-        _BUCKET, _bucket_expr(keys, n_buckets)
-    ).localCheckpoint(eager=False)
+    inc, touched, carried, old_touched = _split_buckets(
+        meta, root, prev_entries, inc0, keys, n_buckets,
+        "merge_upsert_manifest", require_layout=False,
+    )
     # CHECK constraints gate the incoming batch only — the carried/
     # rewritten rows were validated at their own writes
     _enforce_constraints(inc, meta, root)
-    touched = {
-        r[0] for r in inc.select(_BUCKET).distinct().collect()
-    }
-    carried, old_touched = [], []
-    for e in prev_entries:  # single pass, not O(n^2) list membership
-        if e.get("bucket") is not None and e["bucket"] not in touched:
-            carried.append(e)
-        else:
-            old_touched.append(e)
     parts = [inc.drop(_BUCKET)]
     if old_touched:
         paths = list(_entry_paths(root, old_touched).values())
@@ -4987,7 +5065,11 @@ def merge_upsert_manifest(
     merged = parts[0]
     for p in parts[1:]:
         merged = merged.unionByName(p, allowMissingColumns=True)
-    winners = dedup_keep_last(merged, keys=keys, order=[order_col])
+    winners = (
+        reducer(merged)
+        if reducer is not None
+        else dedup_keep_last(merged, keys=keys, order=[order_col])
+    )
     # write-time change data (X153): with the change_feed property on,
     # the merge's row-level changes (insert / update pre+post; carried
     # rows cancel) persist as this commit's cdf- sidecar — the same
@@ -5093,13 +5175,6 @@ def delete_keys_manifest(
     fmt = meta.get("fmt", "parquet")
     txns = dict(meta.get("txns") or {})
     bk = meta.get("bucketing")
-    if not bk or list(bk["keys"]) != list(keys) or int(bk["n_buckets"]) != n_buckets:
-        raise ValueError(
-            f"table at {root} is bucketed as {bk}; delete_keys_manifest "
-            f"called with keys={keys} n_buckets={n_buckets} — key deletes "
-            "ride the bucket layout (build the table via "
-            "merge_upsert_manifest)"
-        )
     prev_entries = _manifest_entries(fs, root, meta)
     if txn_id is not None:
         app, n = txn_id
@@ -5111,19 +5186,10 @@ def delete_keys_manifest(
                 "version": cur_v,
             }
         txns[app] = n
-    dk = (
-        delete_keys.select(*keys)
-        .distinct()
-        .withColumn(_BUCKET, _bucket_expr(keys, n_buckets))
-        .localCheckpoint(eager=False)
+    dk, touched, carried, old_touched = _split_buckets(
+        meta, root, prev_entries, delete_keys.select(*keys).distinct(),
+        keys, n_buckets, "delete_keys_manifest",
     )
-    touched = {r[0] for r in dk.select(_BUCKET).distinct().collect()}
-    carried, old_touched = [], []
-    for e in prev_entries:
-        if e.get("bucket") is not None and e["bucket"] not in touched:
-            carried.append(e)
-        else:
-            old_touched.append(e)
     new_entries: list[dict[str, Any]] = []
     stats_cols = _table_stats_cols(meta) or None
     cdf_ref = None
@@ -5421,14 +5487,6 @@ def delete_keys_dv(
             "row positions come from the parquet _metadata.row_index "
             "column — use delete_keys_manifest for other formats"
         )
-    bk = meta.get("bucketing")
-    if not bk or list(bk["keys"]) != list(keys) or int(bk["n_buckets"]) != n_buckets:
-        raise ValueError(
-            f"table at {root} is bucketed as {bk}; delete_keys_dv "
-            f"called with keys={keys} n_buckets={n_buckets} — keyed "
-            "deletes ride the bucket layout (build the table via "
-            "merge_upsert_manifest)"
-        )
     txns = dict(meta.get("txns") or {})
     old_dv = meta.get("dv")
     if txn_id is not None:
@@ -5443,18 +5501,11 @@ def delete_keys_dv(
         txns[app] = n
     entries = _manifest_entries(fs, root, meta)
     live = [e["name"] for e in entries]
-    dk = (
-        delete_keys.select(*keys)
-        .distinct()
-        .withColumn(_BUCKET, _bucket_expr(keys, n_buckets))
-        .localCheckpoint(eager=False)
+    dk, _, _, hit = _split_buckets(
+        meta, root, entries, delete_keys.select(*keys).distinct(),
+        keys, n_buckets, "delete_keys_dv",
     )
-    touched = {r[0] for r in dk.select(_BUCKET).distinct().collect()}
-    cand = [
-        e["name"]
-        for e in entries
-        if e.get("bucket") is None or e["bucket"] in touched
-    ]
+    cand = [e["name"] for e in hit]
     prev = (
         spark.read.parquet(f"{_stats_dir(root)}/{old_dv['sidecar']}")
         if old_dv

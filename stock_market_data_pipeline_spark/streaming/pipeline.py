@@ -166,16 +166,20 @@ def stream_merge_upsert_sink(
 ) -> StreamingQuery:
     """K6 under streaming: each micro-batch (optionally transformed by
     ``batch_transform`` — which may freely aggregate/join, since it runs on a
-    batch DataFrame inside foreachBatch) MERGEs into the parquet table
-    (last-writer-wins per key). Combined with the checkpoint, reprocessed
+    batch DataFrame inside foreachBatch) MERGEs into the manifest table at
+    ``path`` through :func:`..sinks.manifest_lake.merge_upsert_manifest`
+    (last-writer-wins per key, one committed version per batch; read it
+    with ``read_manifest``). Combined with the checkpoint, reprocessed
     batches are idempotent — the upsert collapses duplicate keys — giving the
     stage+MERGE warehouse semantics (``load_stream_to_snowflake.py:240-305``)
     without a warehouse."""
-    from stock_market_data_pipeline_spark.sinks.lake import merge_upsert
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        merge_upsert_manifest,
+    )
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         out = batch_transform(batch_df) if batch_transform else batch_df
-        merge_upsert(
+        merge_upsert_manifest(
             batch_df.sparkSession, out, path, keys=keys, order_col=order_col
         )
 
@@ -353,7 +357,6 @@ def stream_apply_changelog(
     op_col: str = "op",
     delete_op: str = "delete",
     trigger: dict | None = None,
-    mode: str = "versioned",
     n_buckets: int = 64,
 ) -> StreamingQuery:
     """Continuous CDC materialization: each micro-batch of changelog events
@@ -373,37 +376,28 @@ def stream_apply_changelog(
     lost checkpoint is idempotent for the same reason: re-folding events
     the table has already absorbed picks the same winners.
 
-    ``mode`` picks the persistence layout:
-
-    * ``"versioned"`` — a manifest table
-      (:func:`..sinks.manifest_lake.publish_files`): readers only ever
-      resolve complete versions; time travel works. Per-batch cost is
-      O(batch ∪ current) — the whole table republishes — so this is the
-      small-table / demo form. Superseded versions (and their files) are
-      kept until :func:`..sinks.manifest_lake.vacuum_manifest` runs, as
-      with every other manifest writer.
-    * ``"bucketed"`` — the 100 TB form: winners fold through
-      :func:`..sinks.lake.merge_upsert_bucketed` with ``changelog_winners``
-      as the reducer, so a micro-batch rewrites ONLY the key buckets it
-      touches (dynamic partition overwrite; a 10-key batch against a
-      4096-bucket table rewrites ≈ 0.2 % of it). Tombstones live in their
-      key's bucket; compact them away on a retention schedule with a
-      filtered rewrite of the affected buckets.
+    The table is a manifest table: each batch's winners fold through
+    :func:`..sinks.manifest_lake.merge_upsert_manifest` with
+    ``changelog_winners`` as the reducer, so a micro-batch rewrites ONLY
+    the ``n_buckets`` key buckets it touches (a 10-key batch against a
+    4096-bucket table rewrites ≈ 0.2 % of it) and commits one version:
+    readers only ever resolve complete versions, and time travel works.
+    Superseded versions (and their files) are kept until
+    :func:`..sinks.manifest_lake.vacuum_manifest` runs, as with every
+    other manifest writer. Tombstones live in their key's bucket; retire
+    old ones on a retention schedule with
+    ``delete_where_dv(spark, root, "op = 'delete' AND seq < cutoff")``
+    (then ``purge_deletion_vectors``), keeping the cutoff below the
+    oldest sequence number still in flight — a dropped tombstone re-opens
+    its key to late lower-seq upserts.
 
     State lives in the table, not the state store: an arbitrarily long
     stream holds no growing streaming state.
     """
     from stock_market_data_pipeline_spark.operators.cdc import changelog_winners
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        merge_upsert_bucketed,
-    )
     from stock_market_data_pipeline_spark.sinks.manifest_lake import (
-        publish_files,
-        read_manifest,
+        merge_upsert_manifest,
     )
-
-    if mode not in ("versioned", "bucketed"):
-        raise ValueError(f"mode must be versioned|bucketed, got {mode!r}")
 
     def _winners(df: DataFrame) -> DataFrame:
         return changelog_winners(
@@ -411,26 +405,17 @@ def stream_apply_changelog(
         )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        winners = _winners(batch_df).localCheckpoint(eager=True)
-        if mode == "bucketed":
-            merge_upsert_bucketed(
-                spark,
-                winners,
-                table_root,
-                keys=keys,
-                order_col=seq_col,
-                n_buckets=n_buckets,
-                reducer=_winners,
-            )
-            return
-        try:
-            current = read_manifest(spark, table_root)
-        except FileNotFoundError:  # first batch: no committed version
-            new_state = winners
-        else:
-            new_state = _winners(current.unionByName(winners))
-        publish_files(spark, new_state, table_root)
+        # the reducer folds in-batch duplicates together with the
+        # stored rows, so the raw batch goes in as is
+        merge_upsert_manifest(
+            batch_df.sparkSession,
+            batch_df,
+            table_root,
+            keys=keys,
+            order_col=seq_col,
+            n_buckets=n_buckets,
+            reducer=_winners,
+        )
 
     writer = (
         changes.writeStream.foreachBatch(_fold)

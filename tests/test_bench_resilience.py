@@ -165,3 +165,67 @@ def test_phantom_prior_entry_cannot_mask_a_mover(
     assert artifact["queries"]["slowish"] == sorted(
         [rr["sweep"], rr["rerun"], rr["rerun2"]]
     )[1]
+
+
+def _run_mover_with_failing_rerun(
+    spark, sf_dir, monkeypatch, tmp_path, fail_on_call
+):
+    """One mover (``slowish``: warm-up and sweep slow against a fast
+    prior record) whose ``fail_on_call``-th call raises. Calls: 1 warm-up,
+    2 sweep, 3 rerun, 4 rerun2. Returns the written artifact."""
+    import time as _time
+
+    calls = {"n": 0}
+
+    def slowish(s, d):
+        calls["n"] += 1
+        if calls["n"] == fail_on_call:
+            raise RuntimeError("deliberately failing rerun")
+        if calls["n"] <= 2:
+            _time.sleep(1.2)
+        return s.range(5).selectExpr("id")
+
+    monkeypatch.setattr(bench, "QUERIES", {"slowish": slowish})
+    monkeypatch.setattr(bench, "HEADLINE", ["slowish"])
+    monkeypatch.setattr(bench, "SF_DIR", sf_dir)
+    monkeypatch.setattr(bench, "CPUS", 4)
+    monkeypatch.setattr(bench, "ARTIFACT_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "99")
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    (tmp_path / "BENCH_FULL_r98.json").write_text(
+        json.dumps({"queries": {"slowish": 0.05}})
+    )
+    bench.main()
+    return json.loads((tmp_path / "BENCH_FULL_r99.json").read_text())
+
+
+def test_failed_second_rerun_keeps_the_slower_lap(
+    spark, sf_dir, monkeypatch, capsys, tmp_path
+):
+    """With rerun2 raising, the headline takes max(sweep, rerun): a rerun
+    that cannot complete is no evidence the sweep time was a transient,
+    so the faster lap alone must not replace it. The failure is
+    recorded beside the laps that ran."""
+    artifact = _run_mover_with_failing_rerun(
+        spark, sf_dir, monkeypatch, tmp_path, fail_on_call=4
+    )
+    rr = artifact["queries_rerun"]["slowish"]
+    assert set(rr) == {"sweep", "rerun", "error"}
+    assert "deliberately failing rerun" in rr["error"]
+    assert rr["sweep"] >= 1.2 > rr["rerun"]
+    assert artifact["queries"]["slowish"] == max(rr["sweep"], rr["rerun"])
+
+
+def test_failed_first_rerun_is_recorded(
+    spark, sf_dir, monkeypatch, capsys, tmp_path
+):
+    """With the first rerun raising, the mover keeps its sweep time and
+    its ``queries_rerun`` entry records the failure instead of vanishing
+    from the artifact."""
+    artifact = _run_mover_with_failing_rerun(
+        spark, sf_dir, monkeypatch, tmp_path, fail_on_call=3
+    )
+    rr = artifact["queries_rerun"]["slowish"]
+    assert set(rr) == {"sweep", "error"}
+    assert "deliberately failing rerun" in rr["error"]
+    assert artifact["queries"]["slowish"] == rr["sweep"] >= 1.2

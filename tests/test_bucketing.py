@@ -50,25 +50,3 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir, bucketed_tables):
         map(tuple, expected.collect())
     )
 
-
-def test_bucketed_merge_refuses_data_without_spec(spark, tmp_path):
-    """Bucket partitions on disk but no spec file: merging blindly would
-    treat the table as new and dynamic-overwrite away existing keys — the
-    sink must refuse instead."""
-    import os
-
-    import pytest
-
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        _BUCKET_SPEC,
-        merge_upsert_bucketed,
-    )
-
-    path = str(tmp_path / "btable")
-    df = spark.createDataFrame([(1, "a", 1)], "k long, v string, ts long")
-    merge_upsert_bucketed(spark, df, path, keys=["k"], order_col="ts", n_buckets=4)
-    os.remove(os.path.join(path, _BUCKET_SPEC))  # simulated metadata loss
-    with pytest.raises(ValueError, match="no _merge_bucket_spec"):
-        merge_upsert_bucketed(
-            spark, df, path, keys=["k"], order_col="ts", n_buckets=4
-        )

@@ -1005,6 +1005,39 @@ def test_commit_same_version_race_is_create_exclusive(spark, tmp_path):
     assert fs.read_text(f"{_mf_dir(root)}/v00000002.json") == winner_body
 
 
+def test_orphan_marker_slot_commits_instead_of_raising(
+    spark, tmp_path, caplog
+):
+    """A ``._COMMITTED`` marker whose version JSON was deleted out of band
+    is an orphan: the next writer's exclusive JSON create for that slot
+    succeeds, so no other writer holds it. The commit must succeed and
+    report the version (the marker already makes it visible) rather than
+    raise a lost race for a version that reads as committed — a caller
+    told it lost would retry and apply its data twice."""
+    import logging
+
+    from stock_market_data_pipeline_spark.sinks.lake import _HadoopFS
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        describe_manifest,
+    )
+
+    root = str(tmp_path / "t")
+    publish_files(spark, _ts_df(spark, 1, 3), root)  # v1
+    fs = _HadoopFS(spark, root)
+    fs.write_text(
+        f"{_mf_dir(root)}/v00000002.json._COMMITTED", "v00000002.json"
+    )
+    with caplog.at_level(logging.WARNING):
+        v = publish_files(spark, _ts_df(spark, 5, 6), root)
+    assert v == 2
+    assert any("orphan commit marker" in r.message for r in caplog.records)
+    assert describe_manifest(spark, root)["committed_versions"] == [1, 2]
+    assert read_manifest(spark, root).count() == 10
+    # no gap: the next commit lands on v3 and the pointer resolves it
+    assert publish_files(spark, _ts_df(spark, 7, 8), root) == 3
+    assert describe_manifest(spark, root)["version"] == 3
+
+
 def test_conflict_orphans_are_vacuumed(spark, tmp_path):
     """A refused commit leaves only staged data files; vacuum collects
     them without touching the committed state."""

@@ -427,7 +427,9 @@ def test_incremental_ohlcv_merge_any_order(spark, tmp_path):
         daily_ohlcv,
         merge_daily_ohlcv,
     )
-    from stock_market_data_pipeline_spark.sinks.lake import BUCKET_COL
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        read_manifest,
+    )
 
     rows = [
         # one symbol, one day, ticks deliberately split so the OPEN tick is
@@ -454,7 +456,7 @@ def test_incremental_ohlcv_merge_any_order(spark, tmp_path):
     merge_daily_ohlcv(spark, inc_b, store, n_buckets=8)
     state = {
         r["symbol"]: r
-        for r in spark.read.parquet(store).drop(BUCKET_COL).collect()
+        for r in read_manifest(spark, store).collect()
     }
     a = state["A"]
     assert (a["daily_open"], a["daily_high"], a["daily_low"], a["daily_close"]) == (
@@ -607,13 +609,15 @@ def test_dead_letter_empty_sides_stay_readable(spark, tmp_path):
 
 
 def test_compact_tombstones_null_seq_kept(spark, tmp_path):
-    """A tombstone whose seq is NULL must survive a before_seq compaction
-    — the bare < comparison dropped it from BOTH sides of the rewrite
-    (round-7 review)."""
+    """A tombstone whose seq is NULL must survive a seq-cutoff retention
+    delete — a NULL comparison must read as "not old enough", not drop
+    the row from the rewrite (round-7 review)."""
     from stock_market_data_pipeline_spark.operators.cdc import changelog_winners
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        compact_cdc_tombstones,
-        merge_upsert_bucketed,
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        delete_where_dv,
+        merge_upsert_manifest,
+        purge_deletion_vectors,
+        read_manifest,
     )
 
     rows = [
@@ -624,12 +628,13 @@ def test_compact_tombstones_null_seq_kept(spark, tmp_path):
     df = spark.createDataFrame(rows, "k long, seq long, op string, v double")
     root = str(tmp_path / "t")
     reducer = lambda d: changelog_winners(d, ["k"], "seq")  # noqa: E731
-    merge_upsert_bucketed(
+    merge_upsert_manifest(
         spark, df, root, keys=["k"], order_col="seq", n_buckets=4,
         reducer=reducer,
     )
-    compact_cdc_tombstones(spark, root, seq_col="seq", before_seq=50)
-    left = {r["k"]: r["op"] for r in spark.read.parquet(root).collect()}
+    delete_where_dv(spark, root, "op = 'delete' AND seq < 50")
+    purge_deletion_vectors(spark, root)
+    left = {r["k"]: r["op"] for r in read_manifest(spark, root).collect()}
     assert left == {1: "upsert", 3: "delete"}  # 2 gone, 3 KEPT
 
 

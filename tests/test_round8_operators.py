@@ -59,26 +59,31 @@ def test_line_dedup_oracle_keeps_null_text_docs(spark):
 
 def test_compact_tombstones_null_op_rows_kept(spark, tmp_path):
     """ADVICE r7 #2: a row whose op is NULL failed both filter(cond) and
-    filter(~cond) and vanished from the rewrite of any touched bucket."""
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        BUCKET_COL,
-        compact_cdc_tombstones,
+    filter(~cond) and vanished from the rewrite of any touched bucket.
+    The retention delete must keep it while rewriting the file it shares
+    with the dropped tombstone."""
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        delete_where_dv,
+        merge_upsert_manifest,
+        purge_deletion_vectors,
+        read_manifest,
     )
 
     rows = [
-        (1, 10, "upsert", 0),
-        (2, 11, "delete", 0),  # tombstone -> bucket 0 is rewritten
-        (3, 12, None, 0),      # NULL op in the SAME bucket -> must survive
-        (4, 13, "upsert", 1),  # untouched bucket
+        (1, 10, "upsert"),
+        (2, 11, "delete"),  # tombstone -> its file is rewritten
+        (3, 12, None),      # NULL op -> must survive
+        (4, 13, "upsert"),
     ]
-    df = spark.createDataFrame(
-        rows, f"k long, seq long, op string, {BUCKET_COL} int"
-    )
+    df = spark.createDataFrame(rows, "k long, seq long, op string")
     root = str(tmp_path / "cdc")
-    df.write.partitionBy(BUCKET_COL).parquet(root)
-    touched = compact_cdc_tombstones(spark, root)
-    assert touched == [0]
-    left = {r["k"] for r in spark.read.parquet(root).collect()}
+    # one bucket: the tombstone and the NULL-op row share a file
+    merge_upsert_manifest(
+        spark, df, root, keys=["k"], order_col="seq", n_buckets=1
+    )
+    delete_where_dv(spark, root, "op = 'delete'")
+    assert purge_deletion_vectors(spark, root)["files_rewritten"] == 1
+    left = {r["k"] for r in read_manifest(spark, root).collect()}
     assert left == {1, 3, 4}  # 2 dropped; the NULL-op row 3 KEPT
 
 

@@ -1,4 +1,5 @@
-"""Lake sink tests: partitioned writes, partition-pruned reads, MERGE upsert."""
+"""Lake sink tests: partitioned writes, partition-pruned reads, keyed MERGE
+upsert (``merge_upsert_manifest``)."""
 
 from __future__ import annotations
 
@@ -7,9 +8,14 @@ import os
 from pyspark.sql import functions as F
 
 from stock_market_data_pipeline_spark.sinks.lake import (
-    merge_upsert,
     with_date_partitions,
     write_partitioned,
+)
+from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+    describe_manifest,
+    manifest_files,
+    merge_upsert_manifest,
+    read_manifest,
 )
 from stock_market_data_pipeline_spark.sources.batch import read_parquet_lake
 from stock_market_data_pipeline_spark.sources.ticks import ticks_from_events
@@ -43,171 +49,168 @@ def test_merge_upsert_last_writer_wins(spark, tmp_path):
         [("AAPL", "2024-01-01", 100.0, 1), ("MSFT", "2024-01-01", 200.0, 1)],
         ["symbol", "date", "close", "version"],
     )
-    merge_upsert(spark, b1, path, keys=["symbol", "date"], order_col="version")
+    merge_upsert_manifest(
+        spark, b1, path, keys=["symbol", "date"], order_col="version"
+    )
     b2 = spark.createDataFrame(
         [("AAPL", "2024-01-01", 111.0, 2), ("NVDA", "2024-01-01", 800.0, 2)],
         ["symbol", "date", "close", "version"],
     )
-    merge_upsert(spark, b2, path, keys=["symbol", "date"], order_col="version")
-    got = {
-        (r.symbol, r.close) for r in spark.read.parquet(path).collect()
-    }
+    merge_upsert_manifest(
+        spark, b2, path, keys=["symbol", "date"], order_col="version"
+    )
+    got = {(r.symbol, r.close) for r in read_manifest(spark, path).collect()}
     assert got == {("AAPL", 111.0), ("MSFT", 200.0), ("NVDA", 800.0)}
     # stale incoming (lower version) must NOT overwrite
     b3 = spark.createDataFrame(
         [("AAPL", "2024-01-01", 90.0, 0)], ["symbol", "date", "close", "version"]
     )
-    merge_upsert(spark, b3, path, keys=["symbol", "date"], order_col="version")
-    aapl = spark.read.parquet(path).filter(F.col("symbol") == "AAPL").first()
+    merge_upsert_manifest(
+        spark, b3, path, keys=["symbol", "date"], order_col="version"
+    )
+    aapl = (
+        read_manifest(spark, path).filter(F.col("symbol") == "AAPL").first()
+    )
     assert aapl.close == 111.0
 
 
 def test_merge_upsert_scheme_qualified_uri(spark, tmp_path):
-    # The flat merge routes ALL filesystem traffic through Hadoop's
-    # FileSystem API — an explicit file:// URI (which os.path/shutil would
-    # mangle) must behave identically to a bare local path. This is the
-    # portability contract: the same code path serves hdfs:// and s3a://.
+    # The merge routes ALL filesystem traffic through Hadoop's FileSystem
+    # API — an explicit file:// URI (which os.path/shutil would mangle)
+    # must behave identically to a bare local path, with or without a
+    # trailing slash. This is the portability contract: the same code
+    # path serves hdfs:// and s3a://.
     path = f"file://{tmp_path}/merged_uri"
     b1 = spark.createDataFrame(
-        [("AAPL", "2024-01-01", 100.0, 1)],
+        [("AAPL", "2024-01-01", 100.0, 1), ("MSFT", "2024-01-01", 5.0, 1)],
         ["symbol", "date", "close", "version"],
     )
-    merge_upsert(spark, b1, path, keys=["symbol", "date"], order_col="version")
+    merge_upsert_manifest(
+        spark, b1, path, keys=["symbol", "date"], order_col="version",
+        n_buckets=4,
+    )
     b2 = spark.createDataFrame(
         [("AAPL", "2024-01-01", 111.0, 2), ("NVDA", "2024-01-01", 800.0, 2)],
         ["symbol", "date", "close", "version"],
     )
-    merge_upsert(spark, b2, path, keys=["symbol", "date"], order_col="version")
-    got = {(r.symbol, r.close) for r in spark.read.parquet(path).collect()}
-    assert got == {("AAPL", 111.0), ("NVDA", 800.0)}
-    # no leftover staging/old dirs after the swap
-    import os
-
-    leftovers = [
-        n
-        for n in os.listdir(tmp_path)
-        if n.startswith("merged_uri__")
+    merge_upsert_manifest(
+        spark, b2, path + "/", keys=["symbol", "date"], order_col="version",
+        n_buckets=4,
+    )
+    got = {(r.symbol, r.close) for r in read_manifest(spark, path).collect()}
+    assert got == {("AAPL", 111.0), ("MSFT", 5.0), ("NVDA", 800.0)}
+    assert describe_manifest(spark, path)["committed_versions"] == [1, 2]
+    # nothing written beside the table root, and no staging dir left in it
+    assert os.listdir(tmp_path) == ["merged_uri"]
+    assert not [
+        n for n in os.listdir(tmp_path / "merged_uri" / "data")
+        if n.startswith("stage-")
     ]
-    assert leftovers == []
 
 
 def test_merge_upsert_bucketed_scheme_qualified_uri(spark, tmp_path):
-    from stock_market_data_pipeline_spark.sinks.lake import merge_upsert_bucketed
-
+    # Single-key bucketed table through a file:// root: the second merge
+    # touches one bucket and carries the other key's file unchanged.
     path = f"file://{tmp_path}/bucketed_uri"
     b1 = spark.createDataFrame(
         [(1, "a", 1), (2, "b", 1)], ["k", "v", "version"]
     )
-    merge_upsert_bucketed(spark, b1, path, keys=["k"], order_col="version", n_buckets=4)
+    merge_upsert_manifest(
+        spark, b1, path, keys=["k"], order_col="version", n_buckets=4
+    )
     b2 = spark.createDataFrame([(1, "a2", 2)], ["k", "v", "version"])
-    merge_upsert_bucketed(spark, b2, path, keys=["k"], order_col="version", n_buckets=4)
-    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
+    out = merge_upsert_manifest(
+        spark, b2, path, keys=["k"], order_col="version", n_buckets=4
+    )
+    assert out["touched_buckets"] == 1
+    got = {(r.k, r.v) for r in read_manifest(spark, path).collect()}
     assert got == {(1, "a2"), (2, "b")}
 
 
-def _files_with_mtime(root):
-    import os
-
-    out = {}
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(dirpath, f)
-                out[os.path.relpath(p, root)] = os.path.getmtime(p)
-    return out
+def _data_files(root):
+    return set(os.listdir(os.path.join(root, "data")))
 
 
 def test_bucketed_merge_rewrites_strict_subset(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        BUCKET_COL,
-        merge_upsert,
-        merge_upsert_bucketed,
-    )
-
     path = str(tmp_path / "bucketed")
     base = spark.range(1000).select(
         F.col("id").alias("k"),
         (F.col("id") * 1.0).alias("v"),
         F.lit(0).alias("version"),
     )
-    touched0 = merge_upsert_bucketed(
+    first = merge_upsert_manifest(
         spark, base, path, keys=["k"], order_col="version", n_buckets=16
     )
-    assert len(touched0) == 16  # 1000 keys cover all buckets
-    before = _files_with_mtime(path)
+    assert first["touched_buckets"] == 16  # 1000 keys cover all buckets
+    v1 = {e["name"] for e in manifest_files(spark, path)}
 
     # a 3-key micro-batch: strict subset of buckets rewritten
-    import time
-
-    time.sleep(1.1)  # mtime resolution guard
     small = spark.createDataFrame(
         [(7, -7.0, 1), (8, -8.0, 1), (9, -9.0, 1)], "k long, v double, version int"
     )
-    touched = merge_upsert_bucketed(
+    out = merge_upsert_manifest(
         spark, small, path, keys=["k"], order_col="version", n_buckets=16
     )
-    assert 1 <= len(touched) <= 3 < 16
-    after = _files_with_mtime(path)
+    assert 1 <= out["touched_buckets"] <= 3 < 16
+    v2 = {e["name"] for e in manifest_files(spark, path)}
+    # every file outside the touched buckets is carried by reference
+    carried = v1 & v2
+    assert len(carried) == out["carried_files"] == 16 - out["touched_buckets"]
+    assert len(v2 - v1) == out["rewritten_files"] == out["touched_buckets"]
 
-    changed = {
-        f for f in before if f in after and after[f] != before[f]
-    } | (set(before) ^ set(after))
-    touched_dirs = {f"{BUCKET_COL}={b}" for b in touched}
-    for f in changed:
-        assert f.split("/")[0] in touched_dirs, f"untouched file rewritten: {f}"
-    untouched_before = {f for f in before if f.split("/")[0] not in touched_dirs}
-    assert untouched_before  # the subset really is strict
-    for f in untouched_before:
-        assert after[f] == before[f]
-
-    # semantics: equal to the flat merge_upsert on the same batches
-    flat = str(tmp_path / "flat")
-    merge_upsert(spark, base, flat, keys=["k"], order_col="version")
-    merge_upsert(spark, small, flat, keys=["k"], order_col="version")
-    flat_rows = {
-        (r.k): (r.v, r.version) for r in spark.read.parquet(flat).collect()
+    # semantics: the keep-last fold of both batches
+    rows = {
+        r.k: (r.v, r.version) for r in read_manifest(spark, path).collect()
     }
-    bucketed_rows = {
-        (r.k): (r.v, r.version)
-        for r in spark.read.parquet(path).drop(BUCKET_COL).collect()
-    }
-    assert bucketed_rows == flat_rows
-    assert bucketed_rows[7] == (-7.0, 1) and bucketed_rows[100] == (100.0, 0)
+    want = {k: (k * 1.0, 0) for k in range(1000)}
+    want.update({7: (-7.0, 1), 8: (-8.0, 1), 9: (-9.0, 1)})
+    assert rows == want
 
 
 def test_bucketed_merge_spec_mismatch_raises(spark, tmp_path):
+    """The bucket layout is recorded at the first merge and fixed: a merge
+    or a keyed delete with another layout raises before anything is
+    staged or committed, instead of scattering keys across incompatible
+    bucket tags."""
     import pytest
-    from pyspark.sql import functions as F
 
-    from stock_market_data_pipeline_spark.sinks.lake import merge_upsert_bucketed
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        delete_keys_manifest,
+    )
 
     path = str(tmp_path / "spec")
     df = spark.range(10).select(
         F.col("id").alias("k"), F.lit(1.0).alias("v"), F.lit(0).alias("version")
     )
-    merge_upsert_bucketed(spark, df, path, keys=["k"], order_col="version", n_buckets=8)
-    with pytest.raises(ValueError, match="bucketed with"):
-        merge_upsert_bucketed(
+    merge_upsert_manifest(
+        spark, df, path, keys=["k"], order_col="version", n_buckets=8
+    )
+    files = _data_files(path)
+    with pytest.raises(ValueError, match="bucketed as"):
+        merge_upsert_manifest(
             spark, df, path, keys=["k"], order_col="version", n_buckets=4
         )
+    with pytest.raises(ValueError, match="bucketed as"):
+        delete_keys_manifest(spark, df, path, keys=["k"], n_buckets=4)
+    assert describe_manifest(spark, path)["committed_versions"] == [1]
+    assert _data_files(path) == files
+    # the right layout still merges
+    merge_upsert_manifest(
+        spark, df, path, keys=["k"], order_col="version", n_buckets=8
+    )
+    assert read_manifest(spark, path).count() == 10
 
 
 def test_bucketed_merge_idempotent(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from stock_market_data_pipeline_spark.sinks.lake import merge_upsert_bucketed
-
     path = str(tmp_path / "idem")
     df = spark.range(50).select(
         F.col("id").alias("k"), F.lit(1.0).alias("v"), F.lit(3).alias("version")
     )
     for _ in range(2):
-        merge_upsert_bucketed(
+        merge_upsert_manifest(
             spark, df, path, keys=["k"], order_col="version", n_buckets=8
         )
-    got = spark.read.parquet(path)
+    got = read_manifest(spark, path)
     assert got.count() == 50
     assert got.filter(F.col("version") != 3).count() == 0
 

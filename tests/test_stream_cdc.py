@@ -1,15 +1,14 @@
 """Streaming CDC materialization (stream_apply_changelog): micro-batch
-folds equal the one-shot batch apply in BOTH persistence modes
-(versioned table / bucketed table), deletes tombstone across batches,
-late or redelivered lower-seq events never regress state (the table
-retains seq + tombstones, so every fold is seq-aware), replay after a
-lost checkpoint is idempotent, and a 1-key micro-batch against the
-bucketed layout rewrites exactly one bucket directory.
+folds through the keyed manifest MERGE equal the one-shot batch apply,
+deletes tombstone across batches, late or redelivered lower-seq events
+never regress state (the table retains seq + tombstones, so every fold is
+seq-aware), replay after a lost checkpoint is idempotent, a 1-key
+micro-batch rewrites exactly one key bucket's files, and old tombstones
+retire through deletion vectors.
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 import pytest
@@ -19,13 +18,24 @@ from stock_market_data_pipeline_spark.operators.cdc import (
     apply_changelog,
     read_cdc_state,
 )
+from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+    delete_where_dv,
+    manifest_files,
+    purge_deletion_vectors,
+    read_manifest,
+)
 from stock_market_data_pipeline_spark.streaming.pipeline import (
     stream_apply_changelog,
 )
 
 SCHEMA = "k long, seq long, op string, v double"
 
-MODES = ("versioned", "bucketed")
+# Two table layouts through the one MERGE path: one bucket (every batch
+# rewrites the whole table as one new version) and 8 key buckets (a batch
+# rewrites only the buckets it touches).
+LAYOUTS = pytest.mark.parametrize(
+    "n_buckets", [1, 8], ids=["versioned", "bucketed"]
+)
 
 
 def _chg(spark, rows):
@@ -52,7 +62,7 @@ B2_LATE = [
 ]
 
 
-def _run(spark, src, root, ckpt, mode):
+def _run(spark, src, root, ckpt, n_buckets=8):
     stream = (
         spark.readStream.schema(SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -61,7 +71,7 @@ def _run(spark, src, root, ckpt, mode):
     q = stream_apply_changelog(
         stream, root, keys=["k"], seq_col="seq",
         checkpoint_path=ckpt, trigger={"availableNow": True},
-        mode=mode, n_buckets=8,
+        n_buckets=n_buckets,
     )
     q.awaitTermination(120)
 
@@ -80,11 +90,11 @@ def _write_batches(spark, src, *batches):
         _chg(spark, rows).coalesce(1).write.mode("append").parquet(src)
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_stream_fold_matches_batch_apply(spark, tmp_path, mode):
+@LAYOUTS
+def test_stream_fold_matches_batch_apply(spark, tmp_path, n_buckets):
     src, root, ckpt = (str(tmp_path / d) for d in ("src", "table", "ckpt"))
     _write_batches(spark, src, B0, B1)
-    _run(spark, src, root, ckpt, mode)
+    _run(spark, src, root, ckpt, n_buckets)
 
     got = _state(spark, root)
     want = {
@@ -96,14 +106,14 @@ def test_stream_fold_matches_batch_apply(spark, tmp_path, mode):
     assert got == want == {1: (20, 10.0), 3: (12, 3.0), 4: (23, 4.5)}
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_late_lower_seq_events_do_not_regress_state(spark, tmp_path, mode):
+@LAYOUTS
+def test_late_lower_seq_events_do_not_regress_state(spark, tmp_path, n_buckets):
     """The round-6 ADVICE bug: a redelivered/late event with a LOWER seq in
     a later micro-batch must lose to the seq already in the table — both
     for live rows and for tombstoned keys (no resurrection)."""
     src, root, ckpt = (str(tmp_path / d) for d in ("src", "table", "ckpt"))
     _write_batches(spark, src, B0, B1, B2_LATE)
-    _run(spark, src, root, ckpt, mode)
+    _run(spark, src, root, ckpt, n_buckets)
 
     got = _state(spark, root)
     # identical to folding the full log in one batch apply (seq order,
@@ -118,15 +128,15 @@ def test_late_lower_seq_events_do_not_regress_state(spark, tmp_path, mode):
     assert 2 not in got  # tombstone out-ranks the stale upsert
 
 
-@pytest.mark.parametrize("mode", MODES)
-def test_replay_after_lost_checkpoint_is_idempotent(spark, tmp_path, mode):
+@LAYOUTS
+def test_replay_after_lost_checkpoint_is_idempotent(spark, tmp_path, n_buckets):
     src, root, ckpt = (str(tmp_path / d) for d in ("src", "table", "ckpt"))
     _write_batches(spark, src, B0, B1)
-    _run(spark, src, root, ckpt, mode)
+    _run(spark, src, root, ckpt, n_buckets)
     first = _state(spark, root)
 
     # checkpoint wiped -> the whole log replays onto the existing table
-    _run(spark, src, root, str(tmp_path / "ckpt2"), mode)
+    _run(spark, src, root, str(tmp_path / "ckpt2"), n_buckets)
     assert _state(spark, root) == first
     # tombstoned key stays absent through the replay
     assert 2 not in _state(spark, root)
@@ -135,94 +145,76 @@ def test_replay_after_lost_checkpoint_is_idempotent(spark, tmp_path, mode):
 def test_reader_never_sees_partial_state(spark, tmp_path):
     src, root, ckpt = (str(tmp_path / d) for d in ("src", "table", "ckpt"))
     _chg(spark, B0).coalesce(1).write.mode("append").parquet(src)
-    _run(spark, src, root, ckpt, "versioned")
+    _run(spark, src, root, ckpt)
     # after batch 0 the table is a complete committed version
     assert _state(spark, root) == {1: (10, 1.0), 2: (11, 2.0), 3: (12, 3.0)}
     time.sleep(1.1)
     _chg(spark, B1).coalesce(1).write.mode("append").parquet(src)
-    _run(spark, src, root, str(tmp_path / "ckpt_b"), "versioned")
+    _run(spark, src, root, str(tmp_path / "ckpt_b"))
     df = read_cdc_state(spark, root)
     # one row per surviving key, never a mix of versions
     assert df.groupBy("k").count().filter(F.col("count") > 1).count() == 0
     assert _state(spark, root) == {1: (20, 10.0), 3: (12, 3.0), 4: (23, 4.5)}
 
 
-def _bucket_mtimes(root):
-    out = {}
-    for d in os.listdir(root):
-        if not d.startswith("key_bucket="):
-            continue
-        full = os.path.join(root, d)
-        out[d] = max(
-            os.path.getmtime(os.path.join(full, f))
-            for f in os.listdir(full)
-            if not f.startswith((".", "_"))
-        )
-    return out
+def _entries_by_name(spark, root):
+    return {e["name"]: e["bucket"] for e in manifest_files(spark, root)}
 
 
 def test_bucketed_one_key_batch_rewrites_one_bucket(spark, tmp_path):
-    """File-level audit (zorder-footer style): after the table exists, a
-    micro-batch touching ONE key overwrites exactly one bucket partition
-    directory — the scale contract that clears the full-table-rewrite
-    weakness of the round-6 fold."""
+    """Manifest-level audit: after the table exists, a micro-batch
+    touching ONE key replaces exactly one bucket's files, and every other
+    bucket-tagged file is carried into the new version by reference — the
+    scale contract that clears the full-table-rewrite weakness of the
+    round-6 fold."""
     src, root, ckpt = (str(tmp_path / d) for d in ("src", "table", "ckpt"))
     # seed with keys spread over several of the 8 buckets
     seed = [(k, 10 + k, "upsert", float(k)) for k in range(1, 9)]
     _write_batches(spark, src, seed)
-    _run(spark, src, root, ckpt, "bucketed")
-    before = _bucket_mtimes(root)
-    assert len(before) > 1  # the audit is vacuous on a 1-bucket table
+    _run(spark, src, root, ckpt)
+    before = _entries_by_name(spark, root)
+    assert len(set(before.values())) > 1  # vacuous on a 1-bucket table
 
-    time.sleep(1.05)  # mtime resolution guard
     src2, ckpt2 = str(tmp_path / "src2"), str(tmp_path / "ckpt2")
     _write_batches(spark, src2, [(1, 99, "upsert", 42.0)])
-    _run(spark, src2, root, ckpt2, "bucketed")
-    after = _bucket_mtimes(root)
+    _run(spark, src2, root, ckpt2)
+    after = _entries_by_name(spark, root)
 
-    changed = {d for d in after if after[d] > before.get(d, 0.0)}
-    assert len(changed) == 1
+    gone = {b for n, b in before.items() if n not in after}
+    new = {b for n, b in after.items() if n not in before}
+    assert len(gone) == 1 and new == gone
+    carried = {n for n in before if n in after}
+    assert {before[n] for n in carried} == set(before.values()) - gone
     assert _state(spark, root)[1] == (99, 42.0)
 
 
-def test_compact_cdc_tombstones(spark, tmp_path):
-    """Retention pass drops tombstone rows bucket-locally: only
-    tombstone-bearing buckets rewrite, live state is unchanged, an
-    all-tombstone bucket's directory disappears, and a before_seq cutoff
-    keeps the recent tombstones that still guard against late upserts."""
-    from stock_market_data_pipeline_spark.sinks.lake import (
-        compact_cdc_tombstones,
-    )
-
+def test_tombstone_retention_via_deletion_vectors(spark, tmp_path):
+    """Retention drops tombstone rows with a deletion-vector DELETE and a
+    purge: a seq cutoff keeps the recent tombstones that still guard
+    against late upserts, only the files holding dropped tombstones are
+    rewritten, and live state is unchanged."""
     src, root, ckpt = (str(tmp_path / d) for d in ("src", "table", "ckpt"))
     live = [(k, 10 + k, "upsert", float(k)) for k in range(1, 9)]
     dels = [(100, 50, "delete", None), (200, 60, "delete", None)]
     _write_batches(spark, src, live + dels)
-    _run(spark, src, root, ckpt, "bucketed")
+    _run(spark, src, root, ckpt)
     before_state = _state(spark, root)
-    before_m = _bucket_mtimes(root)
-    n_buckets_before = len(before_m)
 
-    time.sleep(1.05)
     # cutoff keeps the seq-60 tombstone
-    touched = compact_cdc_tombstones(
-        spark, root, seq_col="seq", before_seq=55
-    )
-    df = spark.read.parquet(root)
+    out = delete_where_dv(spark, root, "op = 'delete' AND seq < 55")
+    assert out["deleted_rows"] == 1
+    purged = purge_deletion_vectors(spark, root)
+    assert purged["files_rewritten"] == 1  # the seq-50 tombstone's bucket
+    df = read_manifest(spark, root)
     remaining = {
         r["k"] for r in df.filter(F.col("op") == "delete").collect()
     }
     assert remaining == {200}
     assert _state(spark, root) == before_state  # live rows untouched
-    after_m = _bucket_mtimes(root)
-    changed = {d for d in after_m if after_m[d] > before_m.get(d, 0.0)}
-    removed = set(before_m) - set(after_m)
-    assert len(changed | removed) == len(touched)
 
-    # drop the rest: the seq-60 tombstone's bucket directory may vanish
-    # entirely if it held nothing else
-    compact_cdc_tombstones(spark, root)
-    df2 = spark.read.parquet(root)
+    # drop the rest
+    delete_where_dv(spark, root, "op = 'delete'")
+    purge_deletion_vectors(spark, root)
+    df2 = read_manifest(spark, root)
     assert df2.filter(F.col("op") == "delete").count() == 0
     assert _state(spark, root) == before_state
-    assert len(_bucket_mtimes(root)) <= n_buckets_before

@@ -13,6 +13,7 @@ from stock_market_data_pipeline_spark.operators.incremental import (
     incremental_dedup_batch,
     seed_fingerprint_store,
 )
+from stock_market_data_pipeline_spark.sinks.manifest_lake import read_manifest
 from stock_market_data_pipeline_spark.streaming.pipeline import (
     stream_incremental_dedup,
 )
@@ -73,7 +74,7 @@ def test_cross_batch_and_in_batch_dups(spark, tmp_path):
     assert got[22] == ("novel", 1)
     assert got[23] == ("dup_in_batch", 1)
     # store ends complete: one row per distinct fingerprint ever seen
-    fps = spark.read.parquet(store)
+    fps = read_manifest(spark, store)
     assert fps.count() == fps.select("fingerprint").distinct().count() == 4
 
 
@@ -96,7 +97,7 @@ def test_replay_after_merge_is_classification_stable(spark, tmp_path):
         ).collect()
     }
     assert first == {30: "novel", 31: "dup_in_batch", 32: "dup_of_store"}
-    n_store = spark.read.parquet(store).count()
+    n_store = read_manifest(spark, store).count()
     replay = {
         r.doc_id: r.status
         for r in incremental_dedup_batch(
@@ -104,7 +105,7 @@ def test_replay_after_merge_is_classification_stable(spark, tmp_path):
         ).collect()
     }
     assert replay == first
-    assert spark.read.parquet(store).count() == n_store
+    assert read_manifest(spark, store).count() == n_store
     # a LATER batch now sees the content as prior
     later = {
         r.doc_id: r.status
@@ -134,7 +135,7 @@ def test_stream_restart_does_not_reprocess(spark, tmp_path):
     ).parquet(src)
     _run_stream(spark, src, store, out, ckpt)
     n_out = spark.read.parquet(out).count()
-    n_store = spark.read.parquet(store).count()
+    n_store = read_manifest(spark, store).count()
     _run_stream(spark, src, store, out, ckpt)
     assert spark.read.parquet(out).count() == n_out
-    assert spark.read.parquet(store).count() == n_store
+    assert read_manifest(spark, store).count() == n_store

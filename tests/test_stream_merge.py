@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from stock_market_data_pipeline_spark.plans.analytics import windowed_analytics
+from stock_market_data_pipeline_spark.sinks.manifest_lake import read_manifest
 from stock_market_data_pipeline_spark.sources.ticks import ticks_from_events
 from stock_market_data_pipeline_spark.streaming.pipeline import (
     stream_merge_upsert_sink,
@@ -47,7 +48,7 @@ def test_stream_merge_upsert_idempotent(spark, sf_dir, tmp_path):
         q.awaitTermination(180)
 
     run()
-    merged = spark.read.parquet(table)
+    merged = read_manifest(spark, table)
     # keyed table: exactly one row per (symbol, window_start)
     dups = (
         merged.groupBy("symbol", "window_start").count().filter(F.col("count") > 1)
@@ -56,7 +57,7 @@ def test_stream_merge_upsert_idempotent(spark, sf_dir, tmp_path):
     n1 = merged.count()
     # second run with same checkpoint: no new data → table unchanged
     run()
-    assert spark.read.parquet(table).count() == n1
+    assert read_manifest(spark, table).count() == n1
 
 
 def test_subsecond_gap_boundary_batch_stream_agree(spark):

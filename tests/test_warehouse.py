@@ -1,6 +1,6 @@
 """Warehouse stage+MERGE egress: generated SQL shape (Snowflake dialect) and
 executed semantics (DuckDB / SQLite as stand-in warehouses), proven equal to
-the lake-side merge_upsert's last-writer-wins."""
+the lake-side keyed MERGE's (``merge_upsert_manifest``) last-writer-wins."""
 
 from __future__ import annotations
 
@@ -12,7 +12,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from stock_market_data_pipeline_spark.sinks.lake import merge_upsert
+from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+    merge_upsert_manifest,
+    read_manifest,
+)
 from stock_market_data_pipeline_spark.sinks.warehouse import (
     DUCKDB,
     SNOWFLAKE,
@@ -135,10 +138,12 @@ def test_duckdb_merge_matches_lake_merge_upsert(spark, tmp_path):
 
     lake = str(tmp_path / "lake_merge")
     for b in (batch1, batch2):
-        merge_upsert(spark, b, lake, keys=["symbol", "date"], order_col="last_updated")
+        merge_upsert_manifest(
+            spark, b, lake, keys=["symbol", "date"], order_col="last_updated"
+        )
     lake_rows = {
         (r.symbol, r.date): (r.daily_open, r.daily_close)
-        for r in spark.read.parquet(lake).collect()
+        for r in read_manifest(spark, lake).collect()
     }
 
     assert warehouse == lake_rows

@@ -124,6 +124,26 @@ def _bw_worker(_):
     return 5 * 2 * a.nbytes / (time.perf_counter() - t0) / 1e9
 
 
+def _stop_spark(spark) -> None:
+    """Stop the session, shut down the py4j gateway, close the JVM's
+    stdin and wait for the JVM to exit: ``spark.stop()`` alone leaves
+    the JVM running after the Python process is gone."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    spark.stop()
+    if gateway is None:
+        return
+    jvm_proc = getattr(gateway, "proc", None)
+    gateway.shutdown()
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+    if jvm_proc is not None:
+        if jvm_proc.stdin is not None:
+            jvm_proc.stdin.close()
+        jvm_proc.wait(timeout=15)
+
+
 def main() -> None:
     # capture BEFORE the session/warm-up: the bench's own warm-up jobs
     # inflate loadavg, and the point of this number is to flag OTHER
@@ -359,7 +379,7 @@ def main() -> None:
         summary["errors"].pop(list(summary["errors"])[-1])
         line = json.dumps(summary)
     print(line)
-    spark.stop()
+    _stop_spark(spark)
     # Exit 0 even with errors: the driver must record the surviving timings
     # (r3's rc=1 run was recorded as parsed:null). `errors` is the loud flag.
 

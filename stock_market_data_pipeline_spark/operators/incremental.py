@@ -155,12 +155,16 @@ def incremental_dedup_batch(
             .alias("first_batch_id"),
         )
     )
-    merge_upsert_manifest(
-        spark,
-        novel,
-        store_path,
-        keys=[STORE_KEY],
-        order_col="canonical_id",
-        n_buckets=n_buckets,
-    )
+    # a batch of known documents adds nothing: commit no empty store
+    # version (the check reads the checkpointed classification); the
+    # first call still creates the store
+    if store is None or not novel.isEmpty():
+        merge_upsert_manifest(
+            spark,
+            novel,
+            store_path,
+            keys=[STORE_KEY],
+            order_col="canonical_id",
+            n_buckets=n_buckets,
+        )
     return classified

@@ -1485,6 +1485,17 @@ def _commit_locked(
         "writer_features": sorted(wf),
     }
     body = _json.dumps(payload, default=str)
+    marker = f"{mpath}{_COMMIT_SUFFIX}"
+    if not write_marker and fs.exists(marker) and not fs.exists(mpath):
+        # a marker-less staging must stay invisible, but a marker already
+        # at its slot would publish the un-audited version the moment its
+        # JSON lands. With no JSON at the slot the marker is an orphan (a
+        # writer creates its JSON before its marker): remove it first.
+        _log.warning(
+            "orphan commit marker at %s: removed before staging v%d",
+            marker, nxt,
+        )
+        fs.delete(marker)
     try:
         fs.write_text_exclusive(mpath, body)
         # write_marker=False stages the version INVISIBLY (readers
@@ -1492,9 +1503,7 @@ def _commit_locked(
         # promotes via _promote_manifest or abandons it to vacuum
         if write_marker:
             try:
-                fs.write_text_exclusive(
-                    f"{mpath}{_COMMIT_SUFFIX}", _mf_name(nxt)
-                )
+                fs.write_text_exclusive(marker, _mf_name(nxt))
             except FileExistsError:
                 # this writer's exclusive JSON create above succeeded, so
                 # no other writer can have committed this slot: the
@@ -1504,8 +1513,8 @@ def _commit_locked(
                 # committed; skipping the slot would leave a gap that
                 # stops the pointer's forward probe.
                 _log.warning(
-                    "orphan commit marker at %s%s: committed v%d over it",
-                    mpath, _COMMIT_SUFFIX, nxt,
+                    "orphan commit marker at %s: committed v%d over it",
+                    marker, nxt,
                 )
     except (FileExistsError, LockUnavailableError) as exc:
         # LockUnavailableError comes from a LeaseCommitLock adapter under

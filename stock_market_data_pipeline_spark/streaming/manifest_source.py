@@ -37,12 +37,12 @@ Contract mirrors Delta's streaming source:
   ``delete``, ``update_preimage``, ``update_postimage``} plus
   ``commit_version`` (Delta's ``_change_type``/``_commit_version``).
   Planning stays METADATA-SIZED and fully partition-local: an append
-  plans its added files as ``insert`` partitions; a ``DELETE_DV`` /
+  plans its added files as ``insert`` units; a ``DELETE_DV`` /
   ``UPDATE_DV`` commit plans, per touched file, the positions newly
   recorded in the version's DV sidecar (pre-images read by
   ``Table.take`` on the raw file — positions ARE row indexes), and an
   ``UPDATE_DV``'s appended files become ``update_postimage``
-  partitions; row-preserving maintenance (compaction, DV/column
+  units; row-preserving maintenance (compaction, DV/column
   purges, sidecar consolidation) emits nothing. No cross-file join
   anywhere — the WRITER's commit discipline (one operation name + one
   DV sidecar per version) is what makes the feed reconstructible from
@@ -63,10 +63,21 @@ Contract mirrors Delta's streaming source:
 Scale posture: offset resolution is the sink's own latest-version walk
 (advisory pointer plus forward probe, ``manifest_lake._latest_committed``)
 run over ``os`` calls; planning is a file-set difference (O(changed
-files)); each planned file becomes one ``InputPartition`` read
-executor-side by pyarrow in Arrow batches — no row-at-a-time Python in
-the data path. This reader resolves paths with ``os`` (``file:``
-scheme); an object-store deployment swaps ``_OsFS`` and the
+files)). Each planned read — a file, a DV-position delta, a ``cdf-``
+sidecar part — is a unit, and the units are packed into splits by
+Spark's file-source rule at its defaults (128 MB ``maxPartitionBytes``,
+4 MB ``openCostInBytes`` per unit, sizes from the manifest's recorded
+``bytes``): largest first, a split closes before the unit that would
+pass the limit, so a file of 128 MB or more reads alone and small files
+share one task. Each split is one ``InputPartition``, read executor-side
+by pyarrow in Arrow batches — no row-at-a-time Python in the data path.
+Packing is there because a Python data-source task pays a fixed cost
+before ``read()`` runs that dwarfs a small file's read. A follower
+catching up on 16 files of 4,000 ticks (``perfbench`` ``stream_ingest``,
+seed 401, 4 cores) spent 3.97 s of executor run time in 16 tasks when
+planned one task per file, and 0.29 s in one packed task; its job time
+fell from 1.27 s to 0.35 s. This reader resolves paths with ``os``
+(``file:`` scheme); an object-store deployment swaps ``_OsFS`` and the
 ``_local``-based helpers for fsspec equivalents — the offset/planning
 logic is scheme-agnostic.
 """
@@ -172,24 +183,75 @@ def _entry_names(root: str, meta: dict) -> list[str]:
     return [e["name"] for e in _entries(root, meta)]
 
 
+# Spark's own file-source packing rule (``FilePartition.getFilePartitions``)
+# at the defaults of ``spark.sql.files.maxPartitionBytes`` and
+# ``spark.sql.files.openCostInBytes``: the planner runs in a process with
+# no Spark session, so the defaults are written here, not read from conf
+_MAX_SPLIT_BYTES = 128 * 1024 * 1024
+_OPEN_COST_BYTES = 4 * 1024 * 1024
+
+
 @dataclass
-class _FilePartition(InputPartition):
-    path: str
+class _Split(InputPartition):
+    """One read task: a tuple of read units
+    ``(path, change_type, commit_version, positions)``. A raw-append unit
+    leaves the last three ``None``; a change-feed unit is a whole added
+    file (``positions is None``), the newly-DV'd positions of one
+    surviving file, or one ``cdf-`` sidecar part (``change_type is None``:
+    the type rides in the recorded rows). Positions ride the split (the
+    planner already holds the sidecar rows, and a DV delta is
+    deleted-rows-sized by contract — metadata, not data)."""
+
+    units: tuple
     arrow_schema_bytes: bytes  # serialized target schema (IPC)
 
 
-@dataclass
-class _CdfPartition(InputPartition):
-    """One change-feed unit: a whole added file (``positions is None``)
-    or the newly-DV'd positions of one surviving file. Positions ride
-    the partition (the planner already holds the sidecar rows, and a
-    DV delta is deleted-rows-sized by contract — metadata, not data)."""
+def _pack(sized_units: list[tuple[int, tuple]], schema_bytes: bytes):
+    """Pack ``(bytes, unit)`` pairs into splits by Spark's rule: largest
+    first, each unit costs its bytes plus the open cost, and a split
+    closes before a unit that would take it past the limit — so a unit
+    of the limit or more sits alone, and small files share a task. The
+    order is total (size, then path, version, type), so the same offsets
+    always plan the same splits (checkpoint replay stays exactly-once)."""
+    splits: list[_Split] = []
+    cur: list[tuple] = []
+    size = 0
+    for nbytes, unit in sorted(
+        sized_units,
+        key=lambda su: (
+            -su[0], su[1][0], su[1][2] or 0, su[1][1] or "",
+        ),
+    ):
+        if cur and size + nbytes > _MAX_SPLIT_BYTES:
+            splits.append(_Split(tuple(cur), schema_bytes))
+            cur, size = [], 0
+        cur.append(unit)
+        size += nbytes + _OPEN_COST_BYTES
+    if cur:
+        splits.append(_Split(tuple(cur), schema_bytes))
+    return splits
 
-    path: str
-    arrow_schema_bytes: bytes
-    change_type: str
-    commit_version: int
-    positions: tuple | None  # None = whole file
+
+def _sized_units(root: str, ents: list[dict], names, unit) -> list:
+    """``(bytes, unit(name, path))`` for the named entries: bytes as the
+    manifest recorded them, the path honoring a shallow clone's
+    per-entry base (the entry's bytes live in the SOURCE table's data
+    dir)."""
+    data = f"{root.rstrip('/')}/data"
+    by_name = {e["name"]: e for e in ents}
+    out = []
+    for n in sorted(names):
+        e = by_name[n]
+        path = (
+            f"{_local(e['base'])}/{e['name']}"
+            if e.get("base")
+            else f"{data}/{e['name']}"
+        )
+        nbytes = e.get("bytes")
+        if nbytes is None:
+            nbytes = os.path.getsize(path)
+        out.append((int(nbytes), unit(n, path)))
+    return out
 
 
 # commits that rewrite/drop files while preserving the visible row set —
@@ -301,21 +363,11 @@ class ManifestStreamReader(DataSourceStreamReader):
                 "rows; run maintenance behind the stream's watermark or "
                 "set ignoreChanges=true to accept re-surfaced rows"
             )
-        # honor a shallow clone's per-entry base (the entry's bytes
-        # live in the SOURCE table's data dir)
-        data = f"{self._root.rstrip('/')}/data"
-        paths = {
-            e["name"]: (
-                f"{_local(e['base'])}/{e['name']}"
-                if e.get("base")
-                else f"{data}/{e['name']}"
-            )
-            for e in ents1
-        }
-        return [
-            _FilePartition(paths[n], self._schema_bytes)
-            for n in sorted(set(new) - old)
-        ]
+        units = _sized_units(
+            self._root, ents1, set(new) - old,
+            lambda n, path: (path, None, None, None),
+        )
+        return _pack(units, self._schema_bytes)
 
     def _cdf_partitions(self, v0: int, v1: int):
         """Plan the change feed for (v0, v1] ONE VERSION AT A TIME —
@@ -324,7 +376,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         unlike the raw mode the range never collapses to an endpoint
         diff. Cost: O(versions × entries) driver-side metadata."""
         root = self._root
-        parts: list[_CdfPartition] = []
+        units: list[tuple[int, tuple]] = []
         prev_meta = _load_meta(root, v0) if v0 > 0 else {}
         prev_names = set(_entry_names(root, prev_meta)) if v0 > 0 else set()
         prev_dv = _dv_positions(root, prev_meta) if v0 > 0 else {}
@@ -371,15 +423,13 @@ class ManifestStreamReader(DataSourceStreamReader):
                             ".parquet"
                         ):
                             continue
-                        parts.append(
-                            _CdfPartition(
-                                f"{sdir}/{fn}",
-                                self._schema_bytes,
-                                None,  # change_type rides IN the file
-                                v,
-                                None,
-                            )
-                        )
+                        # no recorded size for sidecar parts
+                        part = f"{sdir}/{fn}"
+                        units.append((
+                            os.path.getsize(part),
+                            # change_type rides IN the file
+                            (part, None, v, None),
+                        ))
                 prev_meta, prev_names = meta, names
                 _dv_step(meta)
                 continue
@@ -399,39 +449,25 @@ class ManifestStreamReader(DataSourceStreamReader):
                     "read_manifest_table_changes per-commit walk) and "
                     "restart the stream past it"
                 )
-            data = f"{root.rstrip('/')}/data"
-            paths = {
-                e["name"]: (
-                    f"{_local(e['base'])}/{e['name']}"
-                    if e.get("base")
-                    else f"{data}/{e['name']}"
-                )
-                for e in ents
-            }
             added_ct = "update_postimage" if op == "UPDATE_DV" else "insert"
-            for n in sorted(names - prev_names):
-                parts.append(
-                    _CdfPartition(
-                        paths[n], self._schema_bytes, added_ct, v, None
-                    )
-                )
+            units += _sized_units(
+                root, ents, names - prev_names,
+                lambda n, path: (path, added_ct, v, None),
+            )
             old_dv = dict(prev_dv)  # pre-step snapshot for the delta
             dv = _dv_step(meta)
             dv_ct = "update_preimage" if op == "UPDATE_DV" else "delete"
-            for n in sorted(set(dv) & prev_names & names):
-                fresh = dv[n] - old_dv.get(n, set())
-                if fresh:
-                    parts.append(
-                        _CdfPartition(
-                            paths[n],
-                            self._schema_bytes,
-                            dv_ct,
-                            v,
-                            tuple(sorted(fresh)),
-                        )
-                    )
+            fresh = {
+                n: tuple(sorted(dv[n] - old_dv.get(n, set())))
+                for n in set(dv) & prev_names & names
+            }
+            # a DV unit reads its whole file, so it weighs the file's bytes
+            units += _sized_units(
+                root, ents, [n for n, pos in fresh.items() if pos],
+                lambda n, path: (path, dv_ct, v, fresh[n]),
+            )
             prev_meta, prev_names = meta, names
-        return parts
+        return _pack(units, self._schema_bytes)
 
     def read(self, partition):
         import pyarrow as pa
@@ -440,42 +476,42 @@ class ManifestStreamReader(DataSourceStreamReader):
         target = pa.ipc.read_schema(
             pa.py_buffer(partition.arrow_schema_bytes)
         )
-        t = pq.read_table(partition.path)
-        is_cdf = isinstance(partition, _CdfPartition)
-        if is_cdf and partition.positions is not None:
-            # DV positions ARE parquet row indexes: Table.take on the
-            # raw file yields exactly the changed rows, no join
-            t = t.take(list(partition.positions))
-        cols = []
-        for field in target:
-            if is_cdf and field.name == "change_type":
-                if partition.change_type is None:
-                    # X153 sidecar partition: the change type rides in
-                    # the recorded change rows themselves
-                    cols.append(
-                        t.column("change_type").cast(field.type)
-                    )
-                    continue
-                # constant columns via pa.repeat — never a file-sized
-                # Python list
-                cols.append(pa.repeat(
-                    pa.scalar(partition.change_type, type=field.type),
-                    t.num_rows,
-                ))
-            elif is_cdf and field.name == "commit_version":
-                cols.append(pa.repeat(
-                    pa.scalar(partition.commit_version, type=field.type),
-                    t.num_rows,
-                ))
-            elif field.name in t.column_names:
-                cols.append(t.column(field.name).cast(field.type))
-            else:
-                # file pre-dates a schema-evolving append: NULL-fill,
-                # the parquet evolution contract read_manifest applies
-                cols.append(pa.nulls(t.num_rows, type=field.type))
-        yield from pa.Table.from_arrays(
-            cols, schema=target
-        ).to_batches(max_chunksize=1 << 15)
+        for path, change_type, commit_version, positions in partition.units:
+            t = pq.read_table(path)
+            if positions is not None:
+                # DV positions ARE parquet row indexes: Table.take on
+                # the raw file yields exactly the changed rows, no join
+                t = t.take(list(positions))
+            cols = []
+            for field in target:
+                # a raw-append unit, and a cdf- sidecar part for its
+                # change_type, leave the tag None: the column then
+                # comes from the file like any other
+                if field.name == "change_type" and change_type is not None:
+                    # constant columns via pa.repeat — never a
+                    # file-sized Python list
+                    cols.append(pa.repeat(
+                        pa.scalar(change_type, type=field.type),
+                        t.num_rows,
+                    ))
+                elif (
+                    field.name == "commit_version"
+                    and commit_version is not None
+                ):
+                    cols.append(pa.repeat(
+                        pa.scalar(commit_version, type=field.type),
+                        t.num_rows,
+                    ))
+                elif field.name in t.column_names:
+                    cols.append(t.column(field.name).cast(field.type))
+                else:
+                    # file pre-dates a schema-evolving append:
+                    # NULL-fill, the parquet evolution contract
+                    # read_manifest applies
+                    cols.append(pa.nulls(t.num_rows, type=field.type))
+            yield from pa.Table.from_arrays(
+                cols, schema=target
+            ).to_batches(max_chunksize=1 << 15)
 
     def commit(self, end: dict) -> None:
         # offsets live in the checkpoint's offset log; versions are

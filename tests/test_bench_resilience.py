@@ -39,8 +39,9 @@ def test_broken_query_does_not_erase_timings(
     monkeypatch.setattr(bench, "ARTIFACT_DIR", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_ROUND", "99")
     # bench.main calls get_spark (getOrCreate reuses the fixture session) and
-    # then spark.stop(); neuter stop so the shared fixture survives.
-    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    # then stops the session and its JVM; neuter that so the shared fixture
+    # survives.
+    monkeypatch.setattr(bench, "_stop_spark", lambda s: None)
 
     repo_root = os.path.dirname(os.path.abspath(bench.__file__))
     before = {
@@ -99,7 +100,7 @@ def test_transient_mover_reruns_once_and_self_corrects(
     monkeypatch.setattr(bench, "CPUS", 4)
     monkeypatch.setattr(bench, "ARTIFACT_DIR", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_ROUND", "99")
-    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    monkeypatch.setattr(bench, "_stop_spark", lambda s: None)
     # previous round's committed record: both queries were fast
     (tmp_path / "BENCH_FULL_r98.json").write_text(
         json.dumps({"queries": {"slowish": 0.05, "steady": 0.05}})
@@ -148,7 +149,7 @@ def test_phantom_prior_entry_cannot_mask_a_mover(
     monkeypatch.setattr(bench, "CPUS", 4)
     monkeypatch.setattr(bench, "ARTIFACT_DIR", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_ROUND", "99")
-    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    monkeypatch.setattr(bench, "_stop_spark", lambda s: None)
     # N-2 holds the honest steady state; N-1 holds a phantom — under a
     # newest-only baseline the 1.2 s sweep would NOT look like a mover
     (tmp_path / "BENCH_FULL_r97.json").write_text(
@@ -191,7 +192,7 @@ def _run_mover_with_failing_rerun(
     monkeypatch.setattr(bench, "CPUS", 4)
     monkeypatch.setattr(bench, "ARTIFACT_DIR", str(tmp_path))
     monkeypatch.setenv("SPARK_GRAFT_ROUND", "99")
-    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    monkeypatch.setattr(bench, "_stop_spark", lambda s: None)
     (tmp_path / "BENCH_FULL_r98.json").write_text(
         json.dumps({"queries": {"slowish": 0.05}})
     )
@@ -229,3 +230,51 @@ def test_failed_first_rerun_is_recorded(
     assert set(rr) == {"sweep", "error"}
     assert "deliberately failing rerun" in rr["error"]
     assert artifact["queries"]["slowish"] == rr["sweep"] >= 1.2
+
+
+_STOP_PROBE = """
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+import bench
+from stock_market_data_pipeline_spark.session import get_spark
+
+spark = get_spark(app_name="bench-stop-probe", master="local[1]")
+spark.range(3).count()
+bench._stop_spark(spark)
+live = []
+for name in os.listdir("/proc"):
+    if not name.isdigit():
+        continue
+    try:
+        with open(f"/proc/{name}/stat") as fh:
+            stat = fh.read()
+    except OSError:
+        continue
+    comm = stat[stat.index("(") + 1 : stat.rindex(")")]
+    state, ppid = stat[stat.rindex(")") + 2 :].split()[:2]
+    if int(ppid) == os.getpid() and state != "Z":
+        live.append(comm)
+print(json.dumps(live))
+"""
+
+
+def test_stop_spark_leaves_no_jvm_behind(tmp_path):
+    """``spark.stop()`` alone leaves the bench's JVM running after Python
+    exits. The bench's stop helper must also shut down the gateway and
+    wait for the JVM: when it returns, the process has no live child."""
+    import subprocess
+    import sys
+
+    repo_root = os.path.dirname(os.path.abspath(bench.__file__))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="512m")
+    env.pop("SPARK_GRAFT_CPUS", None)
+    out = subprocess.run(
+        [sys.executable, "-c", _STOP_PROBE, repo_root],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=180,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == []

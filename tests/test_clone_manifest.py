@@ -139,7 +139,7 @@ def test_clone_bucketed_table_keeps_merge_contract(spark, tmp_path):
 
 
 def test_stream_source_resolves_clone_base_paths(spark, tmp_path):
-    """The manifest stream's partition planner must honor per-entry
+    """The manifest stream's split planner must honor per-entry
     base paths: a stream over a clone reads the SOURCE table's bytes
     for cloned entries and the clone's own for post-clone appends."""
     from stock_market_data_pipeline_spark.streaming.manifest_source import (
@@ -151,13 +151,13 @@ def test_stream_source_resolves_clone_base_paths(spark, tmp_path):
     clone_manifest(spark, src, dst)
     append_files(spark, _df(spark, 20, 25).coalesce(1), dst)
     reader = ManifestStreamReader(dst, read_manifest(spark, dst).schema, {})
-    parts = reader.partitions({"version": 0}, {"version": 2})
-    paths = sorted(p.path for p in parts)
+    splits = reader.partitions({"version": 0}, {"version": 2})
+    paths = sorted(u[0] for s in splits for u in s.units)
     assert any(p.startswith(f"{src}/data/") for p in paths)
     assert any(p.startswith(f"{dst}/data/") for p in paths)
     # the executor read path opens both
     rows = sum(
-        b.num_rows for p in parts for b in reader.read(p)
+        b.num_rows for s in splits for b in reader.read(s)
     )
     assert rows == 25
 

@@ -87,3 +87,29 @@ def test_incremental_lookup_prunes_store_partitions(spark, sf_dir, tmp_path):
     assert classified.count() == tiny.count()
     for r in classified.collect():
         assert (r["status"] == "dup_of_store") == (r[STORE_KEY] in in_store)
+
+
+def test_replayed_known_batch_commits_no_store_version(spark, tmp_path):
+    """A batch whose documents are all already in the store has nothing
+    to merge: replaying it must not grow the store's log by an empty
+    version per call, and must classify the same way every time."""
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        describe_manifest,
+    )
+
+    store = str(tmp_path / "fp_store")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma delta")], "doc_id long, text string"
+    )
+    seed_fingerprint_store(spark, docs, store)
+    versions = describe_manifest(spark, store)["committed_versions"]
+    runs = [
+        sorted(
+            (r["doc_id"], r["status"])
+            for r in incremental_dedup_batch(spark, docs, store).collect()
+        )
+        for _ in range(3)
+    ]
+    assert runs == [[(1, "dup_of_store"), (2, "dup_of_store")]] * 3
+    assert describe_manifest(spark, store)["committed_versions"] == versions
+    assert read_manifest(spark, store).count() == 2

@@ -1038,6 +1038,49 @@ def test_orphan_marker_slot_commits_instead_of_raising(
     assert describe_manifest(spark, root)["version"] == 3
 
 
+def test_orphan_marker_cannot_publish_a_staged_wap_version(
+    spark, tmp_path, caplog
+):
+    """A WAP staging lands on a slot whose orphan ``._COMMITTED`` marker
+    (JSON deleted out of band) would make the un-audited version visible
+    the moment its JSON is written, and a failing audit would then delete
+    that JSON from under the marker. The staging removes the orphan
+    first: the audit's readers see only v1, and a refused audit leaves
+    the table readable exactly as it was."""
+    import logging
+
+    from stock_market_data_pipeline_spark.sinks.lake import _HadoopFS
+    from stock_market_data_pipeline_spark.sinks.manifest_lake import (
+        AuditFailedError,
+        describe_manifest,
+        publish_files_wap,
+    )
+
+    root = str(tmp_path / "t")
+    publish_files(spark, _ts_df(spark, 1, 3), root)  # v1
+    before = read_manifest(spark, root).count()
+    _HadoopFS(spark, root).write_text(
+        f"{_mf_dir(root)}/v00000002.json._COMMITTED", "v00000002.json"
+    )
+    seen = []
+
+    def audit(df):
+        seen.append(read_manifest(spark, root).count())
+        return False
+
+    with caplog.at_level(logging.WARNING):
+        with pytest.raises(AuditFailedError):
+            publish_files_wap(spark, _ts_df(spark, 5, 6), root, audit=audit)
+    assert any("orphan commit marker" in r.message for r in caplog.records)
+    assert seen == [before]
+    assert describe_manifest(spark, root)["committed_versions"] == [1]
+    assert read_manifest(spark, root).count() == before
+    # a passing audit then promotes normally
+    v = publish_files_wap(spark, _ts_df(spark, 5, 6), root, audit=bool)
+    assert describe_manifest(spark, root)["committed_versions"] == [1, v]
+    assert read_manifest(spark, root).count() > before
+
+
 def test_conflict_orphans_are_vacuumed(spark, tmp_path):
     """A refused commit leaves only staged data files; vacuum collects
     them without touching the committed state."""
